@@ -719,15 +719,15 @@ def minhash_verified_pairs(
     # ONLY for candidate docs: the semi join keeps the interpreted
     # per-doc array build proportional to the candidate count, not
     # the corpus (the banding design bounds |cand| ~ linear). cand is
-    # persisted - it has three consumers (the verify broadcast and
-    # both endpoints of the doc-id restriction) and each reference
+    # persisted - it has three consumers (the verify join and both
+    # endpoints of the doc-id restriction) and each reference
     # would otherwise replan the band self-join + distinct (measured:
     # the uncached form tripled the subtree, 37 vs 16 static-plan
     # Exchanges). The sets frame is persisted: both verify sides read
     # it and exchange reuse does not recognize the diamond. No
-    # broadcast hint on the semi join's build side: the candidate set
-    # is data-dependent (the r14 broadcast_below lesson); AQE converts
-    # from the real runtime size, which at fixture scale it does.
+    # broadcast hint on either join with cand: its size depends on the
+    # data (band skew grows it), so AQE picks the strategy from the
+    # runtime size; at fixture scale it broadcasts.
     cand_docs = cand.select(
         F.explode(F.array("doc1", "doc2")).alias("doc_id")
     )
@@ -739,7 +739,7 @@ def minhash_verified_pairs(
     )
     verified = (
         sets.select(F.col("doc_id").alias("doc1"), F.col("s").alias("s1"), F.col("n_sh").alias("n1"))
-        .join(F.broadcast(cand), "doc1")
+        .join(cand, "doc1")
         .join(
             # Small side here is the cand-sized left; at local SF AQE
             # broadcasts, at 100 TB it shuffles on doc2 - both correct.

@@ -253,11 +253,11 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundary blocks whole-stage fusion and AQE broadcast
     # re-planning), but localCheckpoint WINS (3.8 s): checkpointed
     # blocks replay as a plain scan with truncated lineage, exactly
-    # like q_dedup_groups' CC supersteps. eager=False keeps the
-    # BUILDER lazy - plan-only consumers (the plan audit calls every
-    # builder just to explainString) must not run edge-derivation
-    # jobs or pin never-unpersisted blocks; the first real action
-    # checkpoints once and later readers reuse it. At 100 TB the
+    # like q_dedup_groups' CC supersteps. eager=False defers only the
+    # block-writing job to the first real action; under AQE the
+    # builder still runs the edge build's shuffle stages when it
+    # checkpoints (3 jobs in a traced perfbench run), plan-only
+    # consumers such as the plan audit included. At 100 TB the
     # same role is played by writing the edge list to parquet once
     # and iterating over that scan.
     #

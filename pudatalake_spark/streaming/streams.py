@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from ..loaders import table
 from ..registry import register
@@ -89,56 +90,65 @@ def read_event_stream(
     return reader.parquet(src)
 
 
+#: Cap on the state-store partition count of a drain. Each micro-batch
+#: commits one state file per partition per stateful operator, so its
+#: fixed cost follows partition waves, not data: on the stream-stream
+#: join at sf0.1 a drain took 6.9 s at 32 partitions and 3.1 s at 8,
+#: same result. A drain uses min(cap, defaultParallelism): one wave.
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
-#: RocksDB state-store provider (r11, VERDICT r10 #5; re-measured
-#: r12 after fixing the probe's dead default arm, ADVICE r11).
-#: A/B-measured on the per-user-state keys at 10x/100x event volume
-#: (tools/probe_rocksdb_state.py -> SCALING sec 26). The r12 honest
-#: interleaved re-run REVISES the r11 wiring: RocksDB still wins the
-#: applyInPandasWithState aggregate (s_stateful_running, x100 median
-#: 68.9 -> 61.9 s across 3 samples/arm) but LOSES the native
-#: session-window aggregate it was wired onto in r11
-#: (s_session_window x100 median 53.4 vs 75.1 s - 5 of 6 cross-arm
-#: samples favor the heap store; the r11 numbers predate the fixed
-#: arm), and still loses pure existence-check state
-#: (s_stream_dedup 38.0 vs 41.1 s at x100: 10M tiny puts pay RocksDB
-#: write amplification with no read-side win). Wired accordingly:
-#: only s_stateful_running opts in per query; session-window and
-#: dedup keep the default heap store at this scale (on a real
-#: cluster with state >> executor heap, RocksDB becomes mandatory
-#: for all of them anyway - that trade is the operator's conf to
-#: flip, not this engine's default).
+#: State-store provider that per-user aggregate state opts into (only
+#: ``s_stateful_running``). At x100 events (SCALING §26) RocksDB won the
+#: applyInPandasWithState aggregate (median 68.9 -> 61.9 s) and lost the
+#: session-window aggregate (53.4 vs 75.1 s) and the dedup keys (38.0 vs
+#: 41.1 s), so every other key keeps the heap store. On a cluster whose
+#: state outgrows executor heap RocksDB is mandatory; that is the
+#: deployment's conf to flip, not this engine's default.
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
 )
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+_NO_DATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
 def run_to_memory(
     stream_df, name: str, output_mode: str, state_provider: str | None = None
-) -> None:
-    """Drain a stream into an in-memory sink table named `name`.
+) -> StreamingQuery:
+    """Drain a stream availableNow into an in-memory sink table named
+    `name` and return the terminated query (its ``recentProgress`` has
+    one entry per micro-batch).
 
-    Stateful streaming cost scales with the state-store PARTITION
-    count, not the data: every micro-batch commits a state file per
-    shuffle partition per store (measured on the stream-stream join
-    at sf0.1: 6.9s at 32 partitions -> 3.1s at 8, same result). Size
-    streaming shuffle partitions to the state volume - here the local
-    fixture's; on a cluster, to keys/executor-memory - instead of
-    inheriting the batch setting. Restored after the drain so batch
-    queries keep their own sizing. ``state_provider`` overrides the
-    state-store provider for THIS query (see ROCKSDB_PROVIDER note),
-    likewise restored.
+    For the drain only, and restored after it even when it raises:
+
+    - ``spark.sql.shuffle.partitions`` is
+      min(STREAM_SHUFFLE_PARTITIONS, defaultParallelism), so each
+      batch's state-store commits run in one wave of task slots;
+    - in ``complete`` mode the trailing no-data batch is off. It has no
+      input and a complete aggregate keeps all of its state, so it can
+      only evict upstream watermark state and re-emit the same table;
+      it cost 0.6-0.97 s per ``s_stream_dedup`` drain at local[2]. The
+      state it would evict stays in the checkpoint until a next batch
+      runs (``s_stream_dedup`` ends holding its dedup keys). Append
+      and update modes keep it: it emits what the final watermark
+      closes;
+    - ``state_provider``, if given, is the state-store provider.
     """
-    conf = stream_df.sparkSession.conf
-    prev = conf.get("spark.sql.shuffle.partitions")
-    prev_provider = conf.get(_PROVIDER_CONF, None)
-    conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
+    spark = stream_df.sparkSession
+    conf = spark.conf
+    overrides = {
+        "spark.sql.shuffle.partitions": str(
+            min(STREAM_SHUFFLE_PARTITIONS, spark.sparkContext.defaultParallelism)
+        )
+    }
+    if output_mode == "complete":
+        overrides[_NO_DATA_CONF] = "false"
     if state_provider is not None:
-        conf.set(_PROVIDER_CONF, state_provider)
+        overrides[_PROVIDER_CONF] = state_provider
+    prev = {k: conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        conf.set(k, v)
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -149,13 +159,13 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
+        return q
     finally:
-        conf.set("spark.sql.shuffle.partitions", prev)
-        if state_provider is not None:
-            if prev_provider is None:
-                conf.unset(_PROVIDER_CONF)
+        for k, v in prev.items():
+            if v is None:
+                conf.unset(k)
             else:
-                conf.set(_PROVIDER_CONF, prev_provider)
+                conf.set(k, v)
 
 
 @register("s_watermark_late")
@@ -195,8 +205,7 @@ def s_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "n_events", "dur_us", "sum_value")
     )
-    # r12: back on the default heap store - the fixed-arm A/B showed
-    # the r11 RocksDB opt-in losing here (see ROCKSDB_PROVIDER note).
+    # Heap state store: RocksDB lost this key's A/B (ROCKSDB_PROVIDER).
     run_to_memory(agg, "s_session_window", "append")
     return spark.table("s_session_window")
 

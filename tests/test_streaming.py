@@ -414,3 +414,65 @@ def test_dedup_cross_corpus_stream_equals_batch(spark):
     ).toPandas()
     assert len(batch_pdf) > 0, "fixture produced no cross-corpus dups"
     assert_frames_match(stream_pdf, batch_pdf, "s_dedup_cross_corpus≡batch")
+
+
+def test_drain_sizes_state_and_skips_nodata_batch(spark):
+    """run_to_memory's contract: state-store partitions are one wave of
+    task slots, a complete-mode drain runs no trailing no-data batch,
+    append mode keeps it, and the session conf it overrides is
+    restored after every drain, also one that raises."""
+    import pytest
+
+    conf = spark.conf
+    parts_key = "spark.sql.shuffle.partitions"
+    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = {k: conf.get(k, None) for k in (parts_key, nodata_key)}
+    want_parts = min(
+        streams.STREAM_SHUFFLE_PARTITIONS, spark.sparkContext.defaultParallelism
+    )
+
+    src = streams.stage_event_files(spark, SF_DIR, "t_drain_dedup")
+    dedup = (
+        streams.read_event_stream(spark, src)
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n_unique"))
+    )
+    q = streams.run_to_memory(dedup, "t_drain_dedup", "complete")
+    progress = q.recentProgress
+    assert len(progress) == 1, f"complete drain ran {len(progress)} batches"
+    state_ops = progress[0]["stateOperators"]
+    assert len(state_ops) == 2, state_ops
+    assert {op["numShufflePartitions"] for op in state_ops} == {want_parts}
+    assert {k: conf.get(k, None) for k in prev} == prev
+
+    # Append mode keeps the no-data batch: it emits the windows the
+    # final watermark closes (the s_watermark_late shape).
+    src = streams.stage_event_files(spark, SF_DIR, "t_drain_append")
+    windows = (
+        streams.read_event_stream(spark, src)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count("*").alias("n"))
+    )
+    q = streams.run_to_memory(windows, "t_drain_append", "append")
+    assert len(q.recentProgress) >= 2
+    assert spark.table("t_drain_append").count() > 0
+    assert {k: conf.get(k, None) for k in prev} == prev
+
+    # A drain that fails at start (complete mode without an aggregate)
+    # still restores the conf, from an explicitly set value too.
+    conf.set(nodata_key, "true")
+    try:
+        with pytest.raises(Exception, match="(?i)complete"):
+            streams.run_to_memory(
+                streams.read_event_stream(spark, src), "t_drain_bad", "complete"
+            )
+        assert conf.get(parts_key) == prev[parts_key]
+        assert conf.get(nodata_key) == "true"
+    finally:
+        if prev[nodata_key] is None:
+            conf.unset(nodata_key)
+        else:
+            conf.set(nodata_key, prev[nodata_key])
