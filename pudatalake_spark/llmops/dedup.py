@@ -362,7 +362,7 @@ def near_jaccard_pairs(
     hotdict = (
         inst0.groupBy("shingle")
         .agg(F.count("*").alias("df"))
-        .join(F.broadcast(n_docs))
+        .join(n_docs)
         .filter(
             F.col("df")
             > F.greatest(F.lit(HOT_DF_MIN), F.lit(HOT_DF_FRAC) * F.col("n_docs"))

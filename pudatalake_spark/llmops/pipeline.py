@@ -268,7 +268,7 @@ def q_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rn", F.row_number().over(w)
     )
     return (
-        ranked.crossJoin(F.broadcast(quota))
+        ranked.crossJoin(quota)
         .filter(F.col("rn") <= F.col("q"))
         .groupBy("lang")
         .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars"))
@@ -581,7 +581,7 @@ def q_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cap = avail.agg(F.min(F.col("n_avail") / F.col("w")).alias("t_max"))
     quota = (
-        avail.crossJoin(F.broadcast(cap))
+        avail.crossJoin(cap)
         .select(
             "lang",
             "n_avail",
@@ -597,7 +597,7 @@ def q_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r") <= F.col("k"))
         .groupBy("lang", "n_avail", F.col("k").alias("quota"))
         .agg(F.count("*").alias("n_taken"))
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select(
             "lang",
             "n_avail",
@@ -669,7 +669,7 @@ def q_seq_len_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grand = b.agg(F.sum("total_tokens").alias("grand_tokens"))
     return (
-        b.crossJoin(F.broadcast(grand))
+        b.crossJoin(grand)
         .select(
             "bucket_lo",
             "n_docs",
@@ -735,7 +735,7 @@ def q_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     pt = F.pow("n_docs", F.lit(MIX_TEMP_ALPHA)) / F.col("z")
     praw = F.col("n_docs").cast("double") / F.col("n_total")
     return (
-        avail.crossJoin(F.broadcast(z))
+        avail.crossJoin(z)
         .select(
             "lang",
             "n_docs",
@@ -888,8 +888,8 @@ def q_privacy_kanon(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("k")
     )
     return (
-        cls.crossJoin(F.broadcast(k))
-        .crossJoin(F.broadcast(tot))
+        cls.crossJoin(k)
+        .crossJoin(tot)
         .groupBy("k", "n_classes", "n_records", "min_class")
         .agg(
             F.sum(F.when(F.col("sz") < F.col("k"), 1).otherwise(0))

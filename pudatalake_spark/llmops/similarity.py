@@ -708,7 +708,7 @@ def q_sim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = hits(q_sim_ann_lsh(spark, sf_dir), "lsh").unionByName(
         hits(q_sim_ann_ivf(spark, sf_dir), "ivf")
     )
-    return m.crossJoin(F.broadcast(nq)).select(
+    return m.crossJoin(nq).select(
         "method",
         F.lit(RECALL_K).cast("bigint").alias("k"),
         F.col("n_queries").cast("bigint").alias("n_queries"),
@@ -1016,7 +1016,7 @@ def q_embeddings_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         norm = atav.agg(F.sqrt(F.sum(F.col("u") * F.col("u"))).alias("nrm"))
         v = superstep_checkpoint(
-            atav.crossJoin(F.broadcast(norm)).select(
+            atav.crossJoin(norm).select(
                 F.col("pos").alias("vpos"),
                 (F.col("u") / F.col("nrm")).alias("w"),
             )
@@ -1029,7 +1029,7 @@ def q_embeddings_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigma = av.agg(F.sqrt(F.sum(F.col("d") * F.col("d"))).alias("sigma"))
     return (
-        v.crossJoin(F.broadcast(sigma))
+        v.crossJoin(sigma)
         .select(
             F.col("vpos").cast("bigint").alias("dim"),
             F.col("w").alias("loading"),
@@ -2564,7 +2564,7 @@ def q_sim_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("l2"),
     )
     return (
-        cent.crossJoin(F.broadcast(g))
+        cent.crossJoin(g)
         .select(
             "dim",
             "c_old",
@@ -2734,7 +2734,7 @@ def q_sim_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mean = per_q.agg(F.round(F.avg("ndcg"), 6).alias("mean_ndcg"))
     return (
-        per_q.crossJoin(F.broadcast(mean)).orderBy("query_id")
+        per_q.crossJoin(mean).orderBy("query_id")
     )
 
 
@@ -2854,7 +2854,7 @@ def q_sim_cluster_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     mi = (
         cell.join(F.broadcast(nc), "cid")
         .join(F.broadcast(nl), "label")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .agg(
             F.sum(
                 (F.col("n").cast("double") / F.col("nn"))
@@ -2866,7 +2866,7 @@ def q_sim_cluster_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     hc = (
-        nc.crossJoin(F.broadcast(tot))
+        nc.crossJoin(tot)
         .agg(
             (-F.sum(
                 (F.col("n_c").cast("double") / F.col("nn"))
@@ -2875,7 +2875,7 @@ def q_sim_cluster_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     hl = (
-        nl.crossJoin(F.broadcast(tot))
+        nl.crossJoin(tot)
         .agg(
             (-F.sum(
                 (F.col("n_l").cast("double") / F.col("nn"))
@@ -3026,7 +3026,7 @@ def q_sim_dim_truncation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").cast("bigint").alias("hits"))
         )
         row = (
-            hits.crossJoin(F.broadcast(nq))
+            hits.crossJoin(nq)
             .select(
                 F.lit(dim).cast("bigint").alias("dim"),
                 "n_queries",

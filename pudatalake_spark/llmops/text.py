@@ -171,7 +171,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(score.desc(), F.col("token"))
     return (
         tf.join(F.broadcast(df), "token")
-        .join(F.broadcast(n))
+        .join(n)
         .withColumn("rn", F.row_number().over(w))
         .filter((F.col("rn") <= 5) & (F.col("doc_id") < 50))
         .select("doc_id", "token", F.round(score, 6).alias("tfidf"))
@@ -576,7 +576,7 @@ def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         bigrams.join(c1, "w1")
         .join(c2, ["w1", "w2"])
-        .crossJoin(F.broadcast(vocab))
+        .crossJoin(vocab)
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_bigrams"),
@@ -1014,7 +1014,7 @@ def q_text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         toks.join(
-            F.broadcast(vocab), F.col("token") == F.col("v_token"), "left"
+            vocab, F.col("token") == F.col("v_token"), "left"
         )
         .groupBy("lang")
         .agg(
@@ -1969,7 +1969,7 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         bigrams.join(ua, "wa")
         .join(ub, "wb")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "wa",
             "wb",
@@ -2510,7 +2510,7 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         tf.join(F.broadcast(df), "w")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(corp))
+        .crossJoin(corp)
         .select("doc_id", s.alias("s"))
     )
     return (
@@ -3054,7 +3054,7 @@ def q_text_lang_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = (
         pairs.crossJoin(vocab_words)
-        .crossJoin(F.broadcast(vocab))
+        .crossJoin(vocab)
         .join(
             ca,
             (F.col("la") == F.col("lang_a")) & (F.col("wa") == F.col("w")),
@@ -3335,7 +3335,7 @@ def q_sim_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .join(F.broadcast(alldf), "w")
             .join(dl, "doc_id")
-            .crossJoin(F.broadcast(corp))
+            .crossJoin(corp)
             .groupBy("doc_id")
             .agg(
                 F.count("*").cast("bigint").alias("n_hit"),
@@ -3351,13 +3351,13 @@ def q_sim_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         PRF_FEEDBACK_DOCS
     ).select("doc_id")
     cand = (
-        alltf.join(F.broadcast(fb), "doc_id")
+        alltf.join(fb, "doc_id")
         .filter(
             ~F.col("w").isin(*BM25_QUERY)
             & ~F.col("w").isin(_RAKE_STOPS)
         )
         .join(F.broadcast(alldf), "w")
-        .crossJoin(F.broadcast(corp))
+        .crossJoin(corp)
         .groupBy("w")
         .agg(
             F.round(
@@ -3385,7 +3385,7 @@ def q_sim_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        expanded.crossJoin(F.broadcast(en))
+        expanded.crossJoin(en)
         .select(
             "doc_id",
             "n_hit",
@@ -3479,7 +3479,7 @@ def q_docs_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = global_order(g, "toks", [F.col("toks")], cumsum={"c": "cum"})
     n1 = lens.agg(F.count("*").cast("bigint").alias("n"))
-    g = g.crossJoin(F.broadcast(n1))
+    g = g.crossJoin(n1)
     b = g.agg(
         F.max("n").cast("bigint").alias("n"),
         F.min(
@@ -3502,7 +3502,7 @@ def q_docs_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         g.select("toks", "c")
-        .crossJoin(F.broadcast(b))
+        .crossJoin(b)
         .groupBy(outcome.alias("outcome"))
         .agg(
             F.sum("c").cast("bigint").alias("n_docs"),
@@ -3596,7 +3596,7 @@ def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(int(p),) for p in COVERAGE_PCTS], "coverage_pct bigint"
     )
     return (
-        r.crossJoin(F.broadcast(tot))
+        r.crossJoin(tot)
         .join(
             F.broadcast(ps),
             F.col("cum")

@@ -202,18 +202,13 @@ def cached(df: DataFrame) -> DataFrame:
 
 def broadcast_below(small: DataFrame, source: DataFrame,
                     max_bytes: int) -> DataFrame:
-    """Size-switched broadcast hint (the q_dedup_cross_corpus
-    precedent generalized, VERDICT r13 #1): hint ``small`` for
-    broadcast only while the SOURCE corpus behind it is provably
-    tiny (``scan_bytes`` metadata stat <= max_bytes). ``small`` is
-    typically a data-dependent derived set (hot-line hashes, a
-    near-dup removal list) whose row count grows with the corpus -
-    a forced F.broadcast() on it is correct on fixtures and an
-    executor/driver OOM at 100 TB. Above the threshold - or when
-    the size is unknowable (remote FS) - the hint is dropped and
-    the join plans as a plain shuffled join (AQE may still convert
-    it at runtime from REAL sizes, which is the honest cluster
-    posture: only runtime stats know how big a derived set is)."""
+    """Return ``small`` hinted for broadcast only while ``source``, the
+    scan whose size bounds it, is at most ``max_bytes`` on disk
+    (``scan_bytes``, a metadata stat). Otherwise, or when the size
+    cannot be known (remote FS), return ``small`` itself, unhinted:
+    the join plans shuffled and AQE may still broadcast it from
+    runtime sizes. For derived sets whose row count grows with the
+    data, where a forced broadcast would fail at scale."""
     from pyspark.sql import functions as F
 
     nb = scan_bytes(source)

@@ -170,7 +170,7 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping columns are never NULL in data, so NULL is unambiguous)."""
     t = load(spark, sf_dir)
     joined = t["customer"].join(
-        F.broadcast(t["nation"]),
+        t["nation"],
         t["customer"].c_nationkey == t["nation"].n_nationkey,
     )
     return joined.rollup("n_name", "c_mktsegment").agg(
@@ -193,7 +193,7 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir)
     joined = t["customer"].join(
-        F.broadcast(t["nation"]),
+        t["nation"],
         t["customer"].c_nationkey == t["nation"].n_nationkey,
     )
     return joined.cube("n_name", "c_mktsegment").agg(
@@ -884,7 +884,7 @@ def q_agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("d", "slot"),
     )
     return (
-        cells.join(F.broadcast(probe_slots), ["d", "slot"])
+        cells.join(probe_slots, ["d", "slot"])
         .groupBy("user_id", "exact_n")
         .agg(F.min("cnt").alias("est_n"))
     )
@@ -1315,15 +1315,13 @@ def q_agg_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table(spark, sf_dir, "nation")
     x = (
         o.join(
-            F.broadcast(c.select("c_custkey", "c_nationkey")),
+            c.select("c_custkey", "c_nationkey"),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("c_nationkey"),
-                    F.col("n_name").alias("nation"),
-                )
+            n.select(
+                F.col("n_nationkey").alias("c_nationkey"),
+                F.col("n_name").alias("nation"),
             ),
             "c_nationkey",
         )
@@ -1359,7 +1357,7 @@ def q_agg_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     share_t = F.col("cents").cast("double") / F.col("xx")
     tt = (
-        x.crossJoin(F.broadcast(t))
+        x.crossJoin(t)
         .agg(
             F.sum(share_t * F.log(F.col("n") * share_t)).alias("t_total")
         )
@@ -1367,14 +1365,14 @@ def q_agg_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
     share_g = F.col("x_g").cast("double") / F.col("xx")
     pop_g = F.col("n_g").cast("double") / F.col("n")
     tb = (
-        g.crossJoin(F.broadcast(t))
+        g.crossJoin(t)
         .agg(F.sum(share_g * F.log(share_g / pop_g)).alias("t_between"))
     )
     return (
         g.join(tw, "nation")
-        .crossJoin(F.broadcast(t))
-        .crossJoin(F.broadcast(tb))
-        .crossJoin(F.broadcast(tt))
+        .crossJoin(t)
+        .crossJoin(tb)
+        .crossJoin(tt)
         .select(
             "nation",
             F.col("n_g").alias("n_customers"),

@@ -46,8 +46,8 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir)
     joined = (
         t["orders"]
-        .join(F.broadcast(t["customer"]), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("c_nationkey"))
+        .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
+        .join(t["nation"], F.col("n_nationkey") == F.col("c_nationkey"))
     )
     return (
         joined.groupBy("n_name")
@@ -355,7 +355,7 @@ def q_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     orphan_orders = o.join(
-        F.broadcast(c.select("c_custkey")),
+        c.select("c_custkey"),
         o.o_custkey == F.col("c_custkey"),
         "left_anti",
     ).agg(F.count("*").alias("orders_orphan_custkey"))
@@ -715,7 +715,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
         t["orders"]
         .filter(F.col("o_orderdate") < "1996-03-15")
-        .join(F.broadcast(cust), "o_custkey", "left_semi")
+        .join(cust, "o_custkey", "left_semi")
     )
     li = t["lineitem"].filter(F.col("l_shipdate") > "1996-03-15")
     return (
@@ -924,7 +924,7 @@ def q_events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor = e.agg(F.max(F.to_date("ts")).alias("a"))
     base = (
         e.filter(F.col("event_type") == "purchase")
-        .crossJoin(F.broadcast(anchor))
+        .crossJoin(anchor)
         .groupBy("user_id")
         .agg(
             F.datediff(F.any_value("a"), F.max(F.to_date("ts"))).alias(
@@ -1283,7 +1283,7 @@ def q_events_forecast_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     err = F.col("rev") - F.col("forecast")
     return (
-        shifted.crossJoin(F.broadcast(anchor))
+        shifted.crossJoin(anchor)
         .filter(
             F.col("forecast").isNotNull()
             & (F.col("day") >= F.col("win_start"))
@@ -1440,7 +1440,7 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pairs.join(F.broadcast(ia), F.col("pa") == F.col("ka"))
         .join(F.broadcast(ib), F.col("pb") == F.col("kb"))
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "pa",
             "pb",
@@ -1530,7 +1530,7 @@ def q_events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, Window.currentRow
     )
     total = h.agg(F.sum("n_users").alias("total_conv"))
-    return h.crossJoin(F.broadcast(total)).select(
+    return h.crossJoin(total).select(
         "lag_days",
         "n_users",
         (
@@ -1725,7 +1725,7 @@ def q_events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon = e.agg(F.max(day).alias("t_max"))
     subjects = (
         s.join(conv, "user_id", "left")
-        .crossJoin(F.broadcast(horizon))
+        .crossJoin(horizon)
         .select(
             F.when(
                 F.col("t1").isNotNull(), F.datediff("t1", "t0")
@@ -2226,7 +2226,7 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     states = c.select(F.col("prev_type").alias("state")).distinct()
     n_states = states.agg(F.count("*").alias("k"))
-    pi = states.crossJoin(F.broadcast(n_states)).select(
+    pi = states.crossJoin(n_states).select(
         "state", (F.lit(1.0) / F.col("k")).alias("pi")
     )
     for _ in range(MARKOV_STEPS):
@@ -2707,7 +2707,7 @@ def q_events_concurrent_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry = (
         daytot.alias("L")
         .join(
-            F.broadcast(daytot.alias("R")),
+            daytot.alias("R"),
             F.col("R.day") < F.col("L.day"),
             "left",
         )
@@ -3126,7 +3126,7 @@ def q_part_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part")
     obs = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .filter(
             (F.col("l_quantity") > 0)
             & (F.col("l_extendedprice") > 0)
@@ -3364,7 +3364,7 @@ def q_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
     ).cast("long")
     rev = (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        li.join(s, li.l_suppkey == s.s_suppkey)
         .groupBy(F.col("s_nationkey").alias("nation"), "l_suppkey")
         .agg(F.sum(cents).alias("r"))
     )
@@ -3501,7 +3501,7 @@ def q_events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pre_mean"
         ),
     )
-    adj = per_user.crossJoin(F.broadcast(theta)).select(
+    adj = per_user.crossJoin(theta).select(
         "variant",
         (F.col("post_c") / F.lit(100.0)).alias("y"),
         (
@@ -4621,7 +4621,7 @@ def q_events_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d0 = days.agg(F.min("ed").alias("d0"))
     cohort = (
-        days.crossJoin(F.broadcast(d0))
+        days.crossJoin(d0)
         .filter(F.col("ed") == F.col("d0"))
         .select("user_id")
         .distinct()
@@ -4632,8 +4632,8 @@ def q_events_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     returns = (
         days.join(F.broadcast(cohort), "user_id")
-        .crossJoin(F.broadcast(d0))
-        .crossJoin(F.broadcast(ts))
+        .crossJoin(d0)
+        .crossJoin(ts)
         .filter(F.col("ed") == F.col("d0") + F.col("t"))
         .groupBy("t")
         .agg(F.count_distinct(F.col("user_id")).cast("bigint").alias("n_t"))
@@ -4641,7 +4641,7 @@ def q_events_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve = (
         ts.join(returns, "t", "left")
         .select("t", F.coalesce("n_t", F.lit(0)).cast("bigint").alias("n_t"))
-        .crossJoin(F.broadcast(n0))
+        .crossJoin(n0)
     )
     # pts (<= RET_FIT_MAX_T rows) feeds the fit agg AND the output
     # projection: checkpoint so the curve build runs once (r14).
@@ -4670,7 +4670,7 @@ def q_events_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pred = F.exp(intercept + slope * _math.log(float(RET_FIT_PREDICT_T)))
     return (
-        pts.crossJoin(F.broadcast(fit))
+        pts.crossJoin(fit)
         .select(
             "t",
             "n_t",
@@ -5013,7 +5013,7 @@ def q_events_session_duration_pctl(spark: SparkSession, sf_dir: str) -> DataFram
     )
     g = global_order(g, "dur_ms", [F.col("dur_ms")], cumsum={"c": "cum"})
     n1 = ivals.agg(F.count("*").cast("bigint").alias("n"))
-    g = g.crossJoin(F.broadcast(n1))
+    g = g.crossJoin(n1)
     picks = [
         F.min(
             F.when(

@@ -302,7 +302,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = edges_w.select(F.col("src").alias("node")).distinct()
     n = nodes.agg(F.count("*").cast("double").alias("n"))
     # state_0: uniform 1/N (N delivered in-plan via a 1-row cross join)
-    pr = nodes.crossJoin(F.broadcast(n)).select(
+    pr = nodes.crossJoin(n).select(
         "node", (F.lit(1.0) / F.col("n")).alias("pr")
     )
     for _ in range(3):
@@ -312,7 +312,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("w").alias("inflow"))
         )
-        pr = contrib.crossJoin(F.broadcast(n)).select(
+        pr = contrib.crossJoin(n).select(
             F.col("dst").alias("node"),
             (F.lit(0.15) / F.col("n") + F.lit(0.85) * F.col("inflow")).alias("pr"),
         )
@@ -388,7 +388,7 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     clab = (
         t["customer"]
         .join(
-            F.broadcast(t["nation"]),
+            t["nation"],
             t["customer"]["c_nationkey"] == t["nation"]["n_nationkey"],
         )
         .select(F.col("c_custkey").alias("ck"), F.col("n_name").alias("label"))
@@ -866,7 +866,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = auth2.agg(F.sum("a2").alias("t"))
     return (
-        auth2.crossJoin(F.broadcast(tot))
+        auth2.crossJoin(tot)
         .select(
             F.col("sk").cast("bigint").alias("s_suppkey"),
             F.col("a2").alias("auth_score"),
@@ -987,7 +987,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = dh.agg(F.sum("c").alias("_n"))
     k_row = (
-        cum.crossJoin(F.broadcast(tot))
+        cum.crossJoin(tot)
         .filter(F.col("cum") >= F.floor(KCORE_PCT * (F.col("_n") - 1)) + 1)
         .agg(F.min("d").alias("d"))
         .collect()
@@ -1331,7 +1331,7 @@ def q_graph_louvain_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(own), F.col("u") == F.col("ou"))
         .join(F.broadcast(tot.withColumnRenamed("comm", "tc")),
               F.col("comm") == F.col("tc"))
-        .crossJoin(F.broadcast(m))
+        .crossJoin(m)
     )
     gain = F.round(
         F.col("k_uc")
@@ -1355,7 +1355,7 @@ def q_graph_louvain_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         winner.join(
-            F.broadcast(nat),
+            nat,
             F.col("nk").isin(F.col("own"), F.col("new_comm")),
         )
         .groupBy("community")

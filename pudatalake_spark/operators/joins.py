@@ -2,10 +2,10 @@
 anti, cross, theta/range, as-of, multiway star, self.
 
 Strategy notes (100 TB posture):
-- Dimensions (region/nation/customer at small SF; region/nation
-  always) get an explicit ``broadcast()`` hint - no shuffle of the
-  fact side. AQE also converts to broadcast at runtime when a side's
-  stats come in under the threshold.
+- Dimensions under ``autoBroadcastJoinThreshold`` (region/nation
+  always, customer at small SF) broadcast from their scan size - no
+  shuffle of the fact side, and no hint: AQE also converts a join to
+  broadcast at runtime when a side's real size comes in under it.
 - Fact-fact joins (orders x lineitem) shuffle on the join key; both
   sides are key-partitioned so the join is co-located after one
   exchange. In a real lake, bucketing both tables by orderkey removes
@@ -42,7 +42,7 @@ def q_join_inner_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir)
     return (
         t["nation"]
-        .join(F.broadcast(t["region"]), t["nation"].n_regionkey == t["region"].r_regionkey)
+        .join(t["region"], t["nation"].n_regionkey == t["region"].r_regionkey)
         .select("n_nationkey", "n_name", "r_name")
     )
 
@@ -301,8 +301,8 @@ def q_join_star_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = (
         li.join(t["orders"], li.l_orderkey == t["orders"].o_orderkey)
         .join(t["customer"], F.col("o_custkey") == t["customer"].c_custkey)
-        .join(F.broadcast(t["nation"]), F.col("c_nationkey") == t["nation"].n_nationkey)
-        .join(F.broadcast(t["region"]), F.col("n_regionkey") == t["region"].r_regionkey)
+        .join(t["nation"], F.col("c_nationkey") == t["nation"].n_nationkey)
+        .join(t["region"], F.col("n_regionkey") == t["region"].r_regionkey)
     )
     return joined.groupBy("r_name", "n_name").agg(
         F.count("*").alias("n_items"),
@@ -829,7 +829,7 @@ def q_join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"ts_us div {OVL_W_US}").alias("b")
     ).agg(F.count("*").alias("n_events"))
     busy = buckets.join(
-        F.broadcast(buckets.agg(F.avg("n_events").alias("avg_n")))
+        buckets.agg(F.avg("n_events").alias("avg_n"))
     ).filter(F.col("n_events") > 1.2 * F.col("avg_n")).select("b", "n_events")
     covered = sess.select(
         "user_id",

@@ -410,7 +410,7 @@ def q_diag_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_key.withColumn("rk", rk)
         .filter(F.col("rk") <= 10)
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "rk",
             "l_suppkey",
@@ -446,7 +446,7 @@ def q_lake_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = per_file.agg(F.sum("n_rows").alias("total_rows"))
     return (
-        per_file.crossJoin(F.broadcast(tot))
+        per_file.crossJoin(tot)
         .select(
             "file_name",
             F.col("file_size").cast("bigint").alias("file_size"),
@@ -718,7 +718,7 @@ def q_lake_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     pmask = mask("probe_user")
     return (
         sig.crossJoin(
-            F.broadcast(probes.select(F.col("user_id").alias("probe_user")))
+            probes.select(F.col("user_id").alias("probe_user"))
         )
         .join(
             truth,
@@ -1124,7 +1124,7 @@ def q_lake_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     fk_bad = (
         staged.select("o_custkey")
         .join(
-            F.broadcast(c.select("c_custkey")),
+            c.select("c_custkey"),
             F.col("o_custkey") == F.col("c_custkey"),
             "left_anti",
         )
@@ -1637,7 +1637,7 @@ def q_quality_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date(F.col("now_ts")), F.to_date(F.col("latest"))
     ).cast("bigint")
     return (
-        marks.crossJoin(F.broadcast(now_ref))
+        marks.crossJoin(now_ref)
         .select(
             "tbl",
             "n_rows",

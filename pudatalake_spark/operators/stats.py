@@ -124,7 +124,7 @@ def q_stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = global_order(
         per_v, "v", [F.col("v")], cumsum={"ca": "cca", "cb": "ccb"}
     )
-    ecdf = cum.crossJoin(F.broadcast(n)).withColumn(
+    ecdf = cum.crossJoin(n).withColumn(
         "d",
         F.abs(
             F.col("cca").cast("double") / F.col("na")
@@ -480,7 +480,7 @@ def q_stats_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = (
         obs.join(F.broadcast(rt), "event_type")
         .join(F.broadcast(ct), "dow")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .withColumn("e", F.col("rt").cast("double") * F.col("ct") / F.col("n"))
     )
     dev = (F.col("o") - F.col("e")) * (F.col("o") - F.col("e")) / F.col("e")
@@ -955,7 +955,7 @@ def q_stats_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = F.col("n").cast("double") / F.col("total")
     ref = F.log10(1 + 1.0 / F.col("digit"))
     return (
-        counts.crossJoin(F.broadcast(tot))
+        counts.crossJoin(tot)
         .select(
             "digit",
             "n",
@@ -1271,7 +1271,7 @@ def q_stats_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Integer floor division must NOT go through double '/': build the
     # band with div so both engines run the same integer op.
-    banded = ev.crossJoin(F.broadcast(rng)).select(
+    banded = ev.crossJoin(rng).select(
         F.least(
             F.lit(PSI_BANDS - 1).cast("long"),
             F.expr(
@@ -1290,7 +1290,7 @@ def q_stats_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_curr").cast("bigint").alias("tc"),
     )
     half = F.lit(PSI_BANDS * 0.5)
-    j = per_band.crossJoin(F.broadcast(tot))
+    j = per_band.crossJoin(tot)
     p = (F.col("n_base") + 0.5) / (F.col("tb") + half)
     q = (F.col("n_curr") + 0.5) / (F.col("tc") + half)
     t = (p - q) * F.log(p / q)
@@ -1570,7 +1570,7 @@ def q_stats_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     mi = (
         cells.join(F.broadcast(rt), "r")
         .join(F.broadcast(ct), "c")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .agg(
             F.sum(
                 (od / F.col("n"))
@@ -1578,22 +1578,22 @@ def q_stats_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mi")
         )
     )
-    hr = rt.crossJoin(F.broadcast(tot)).agg(
+    hr = rt.crossJoin(tot).agg(
         (-F.sum(
             (F.col("ro").cast("double") / F.col("n"))
             * F.log(F.col("ro").cast("double") / F.col("n"))
         )).alias("h_row")
     )
-    hc = ct.crossJoin(F.broadcast(tot)).agg(
+    hc = ct.crossJoin(tot).agg(
         (-F.sum(
             (F.col("co").cast("double") / F.col("n"))
             * F.log(F.col("co").cast("double") / F.col("n"))
         )).alias("h_col")
     )
     return (
-        mi.crossJoin(F.broadcast(hr))
-        .crossJoin(F.broadcast(hc))
-        .crossJoin(F.broadcast(tot))
+        mi.crossJoin(hr)
+        .crossJoin(hc)
+        .crossJoin(tot)
         .select(
             "n",
             F.round(F.col("mi"), 6).alias("mi"),
@@ -1708,7 +1708,7 @@ def q_stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = F.lit(6)
     for wt, cdf in reversed(list(enumerate(_POIS_CDF))):
         w = F.when(u < float(cdf), wt).otherwise(w)
-    repl = per_user.crossJoin(F.broadcast(reps)).select(
+    repl = per_user.crossJoin(reps).select(
         "r", w.alias("w"), F.col("c")
     )
     means = repl.groupBy("r").agg(
@@ -1729,7 +1729,7 @@ def q_stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_users"),
         F.sum("c").alias("sc"),
     )
-    return pt.crossJoin(F.broadcast(pick)).select(
+    return pt.crossJoin(pick).select(
         "n_users",
         F.lit(BOOT_R).cast("bigint").alias("r_replicates"),
         F.when(
@@ -2271,7 +2271,7 @@ def q_stats_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("gap_sum"),
     )
     return (
-        b.crossJoin(F.broadcast(g))
+        b.crossJoin(g)
         .select(
             "bin",
             "n_users",
@@ -2463,7 +2463,7 @@ def q_stats_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     v = o.join(
-        F.broadcast(c.select("c_custkey", "c_mktsegment")),
+        c.select("c_custkey", "c_mktsegment"),
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
         F.col("c_mktsegment").alias("seg"),
@@ -2596,7 +2596,7 @@ def q_stats_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_we").cast("bigint").alias("twe"),
         F.count("*").cast("bigint").alias("k"),
     )
-    j = per_type.crossJoin(F.broadcast(tot))
+    j = per_type.crossJoin(tot)
     p = (F.col("n_wd") + 0.5) / (F.col("twd") + F.col("k") * 0.5)
     q = (F.col("n_we") + 0.5) / (F.col("twe") + F.col("k") * 0.5)
     m = 0.5 * p + 0.5 * q
@@ -2689,7 +2689,7 @@ def q_stats_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = daily.select(F.col("ed").alias("aed"), "x")
     b = daily.select(F.col("ed").alias("bed"), "y")
     pairs = (
-        a.crossJoin(F.broadcast(lags))
+        a.crossJoin(lags)
         .join(b, F.col("bed") == F.col("aed") + F.col("lag"))
     )
     s = pairs.groupBy("lag").agg(
@@ -3016,7 +3016,7 @@ def q_stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     v = o.join(
-        F.broadcast(c.select("c_custkey", "c_mktsegment")),
+        c.select("c_custkey", "c_mktsegment"),
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
         F.col("c_mktsegment").alias("seg"),
@@ -3401,7 +3401,7 @@ def q_stats_simpson_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_b = F.col("k_b").cast("double") / F.col("n_b")
     diff = p_b - p_a
     return (
-        strat.crossJoin(F.broadcast(pooled))
+        strat.crossJoin(pooled)
         .select(
             "stratum",
             F.col("n_a").cast("bigint").alias("n_a"),
@@ -3467,7 +3467,7 @@ def q_stats_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     j = o.join(
-        F.broadcast(c.select("c_custkey", "c_acctbal", "c_nationkey")),
+        c.select("c_custkey", "c_acctbal", "c_nationkey"),
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
         F.col("o_totalprice").alias("x"),
@@ -3555,7 +3555,7 @@ def q_sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     dollars = F.round(F.col("o_totalprice"), 0).cast("bigint")
     s = (
         o.join(
-            F.broadcast(c.select("c_custkey", "c_mktsegment")),
+            c.select("c_custkey", "c_mktsegment"),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy(F.col("c_mktsegment").alias("seg"))
@@ -3576,7 +3576,7 @@ def q_sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = s.select("seg", "n_h", weight.alias("weight"))
     t = w.agg(F.sum("weight").alias("z"))
     return (
-        w.crossJoin(F.broadcast(t))
+        w.crossJoin(t)
         .select(
             "seg",
             "n_h",
@@ -3681,7 +3681,7 @@ def q_stats_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pi = float(_PI)
     arg = 2 * pi * F.col("k") * F.col("t") / F.col("n")
     ft = (
-        idx.crossJoin(F.broadcast(ks))
+        idx.crossJoin(ks)
         .groupBy("k")
         .agg(
             F.max("n").alias("n"),
@@ -3696,7 +3696,7 @@ def q_stats_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = pw.agg(F.sum("p").alias("z"))
     return (
-        pw.crossJoin(F.broadcast(tot))
+        pw.crossJoin(tot)
         .select(
             "k",
             F.col("n").alias("n_days"),
@@ -3892,7 +3892,7 @@ def q_stats_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return (
-        cells.crossJoin(F.broadcast(mh))
+        cells.crossJoin(mh)
         .select(
             "stratum",
             "c11",
@@ -4217,7 +4217,7 @@ def q_stats_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = pairs.agg(F.sum("n").cast("bigint").alias("nn"))
     terms = (
         pairs.join(F.broadcast(m), "src")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             (
                 -(F.col("n").cast("double") / F.col("nn"))
@@ -4227,7 +4227,7 @@ def q_stats_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rate = terms.agg(F.round(F.sum("h"), 6).alias("entropy_rate"))
     h0 = (
-        m.crossJoin(F.broadcast(tot))
+        m.crossJoin(tot)
         .agg(
             F.round(
                 -F.sum(
@@ -4414,7 +4414,7 @@ def q_stats_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
     return (
-        rs.crossJoin(F.broadcast(fit))
+        rs.crossJoin(fit)
         .select(
             "w",
             "n_chunks",
@@ -4599,7 +4599,7 @@ def q_stats_dkw_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ds = spark.range(1, 10).select(F.col("id").cast("bigint").alias("d"))
     deciles = r.join(
-        F.broadcast(ds), F.col("rn") == F.expr("(d * n + 9) div 10")
+        ds, F.col("rn") == F.expr("(d * n + 9) div 10")
     )
     eps = F.sqrt(float(DKW_LN_2_OVER_ALPHA) / (2.0 * F.col("n")))
     ecdf = F.col("rn").cast("double") / F.col("n")
@@ -4689,7 +4689,7 @@ def q_stats_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete = (
         daily.groupBy("ed")
         .agg(F.count("*").alias("ct"))
-        .crossJoin(F.broadcast(k_types))
+        .crossJoin(k_types)
         .filter(F.col("ct") == F.col("kk"))
         .select("ed")
     )
@@ -4717,7 +4717,7 @@ def q_stats_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
         - 3.0 * F.col("n") * (F.col("k") + 1)
     )
     return (
-        sums.crossJoin(F.broadcast(g))
+        sums.crossJoin(g)
         .select(
             "event_type",
             "r_sum",
@@ -4809,7 +4809,7 @@ def q_stats_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete = (
         daily.groupBy("ed")
         .agg(F.count("*").alias("ct"))
-        .crossJoin(F.broadcast(k_types))
+        .crossJoin(k_types)
         .filter(F.col("ct") == F.col("kk"))
         .select("ed")
     )
@@ -4919,7 +4919,7 @@ def q_stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     v = o.join(
-        F.broadcast(c.select("c_custkey", "c_mktsegment")),
+        c.select("c_custkey", "c_mktsegment"),
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
         F.col("c_mktsegment").alias("seg"),
@@ -4969,9 +4969,9 @@ def q_stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         n.cast("double") * n * n - n
     )
     return (
-        g.crossJoin(F.broadcast(t))
-        .crossJoin(F.broadcast(ties))
-        .crossJoin(F.broadcast(hsum))
+        g.crossJoin(t)
+        .crossJoin(ties)
+        .crossJoin(hsum)
         .select(
             "seg",
             "n_g",
@@ -5135,7 +5135,7 @@ def q_stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     v = o.join(
-        F.broadcast(c.select("c_custkey", "c_mktsegment")),
+        c.select("c_custkey", "c_mktsegment"),
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
         F.col("c_mktsegment").alias("seg"),
@@ -5292,7 +5292,7 @@ def q_stats_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n")
         ).alias("sxx_c"),
     )
-    resid = idx.crossJoin(F.broadcast(fit)).select(
+    resid = idx.crossJoin(fit).select(
         "ed",
         "x",
         "y",
@@ -5315,7 +5315,7 @@ def q_stats_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     mse = resid.agg(
         (F.sum(F.col("e") * F.col("e")) / (F.max("n") - 2)).alias("s2")
     )
-    cooks = resid.crossJoin(F.broadcast(mse)).select(
+    cooks = resid.crossJoin(mse).select(
         F.col("ed").alias("epoch_day"),
         F.round("e", 4).alias("residual"),
         F.round("h", 6).alias("leverage"),
@@ -5393,7 +5393,7 @@ def q_stats_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     v = o.join(
-        F.broadcast(c.select("c_custkey", "c_mktsegment")),
+        c.select("c_custkey", "c_mktsegment"),
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
         F.col("c_mktsegment").alias("seg"),
@@ -5434,7 +5434,7 @@ def q_stats_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (3.0 * (F.col("k") - 1))
     )
     return (
-        gv.crossJoin(F.broadcast(t))
+        gv.crossJoin(t)
         .select(
             "seg",
             "n",
@@ -5634,7 +5634,7 @@ def q_stats_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         + (1.0 - pc) * F.log(F.nullif(1.0 - pc, F.lit(0.0)))
     )
     cond = (
-        cells.crossJoin(F.broadcast(tot))
+        cells.crossJoin(tot)
         .agg(
             F.sum(
                 (F.col("n").cast("double") / F.col("nn"))
@@ -5643,8 +5643,8 @@ def q_stats_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        cells.crossJoin(F.broadcast(hy))
-        .crossJoin(F.broadcast(cond))
+        cells.crossJoin(hy)
+        .crossJoin(cond)
         .select(
             "feat",
             "n",
@@ -5716,7 +5716,7 @@ def q_stats_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     v = o.join(
-        F.broadcast(c.select("c_custkey", "c_mktsegment")),
+        c.select("c_custkey", "c_mktsegment"),
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
         F.col("c_mktsegment").alias("seg"),
@@ -5817,7 +5817,7 @@ def q_stats_qq_plot(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer")
     v = (
         o.join(
-            F.broadcast(c.select("c_custkey", "c_mktsegment")),
+            c.select("c_custkey", "c_mktsegment"),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .filter(F.col("c_mktsegment").isin(KS_SEG_A, KS_SEG_B))
@@ -5842,7 +5842,7 @@ def q_stats_qq_plot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # value at rank r = smallest cents whose inclusive cum reaches r
     pick = (
-        d.crossJoin(F.broadcast(qs))
+        d.crossJoin(qs)
         .filter(F.col("cum") - F.col("cnt") + 1 <= F.expr("(q * n + 99) div 100"))
         .filter(F.col("cum") >= F.expr("(q * n + 99) div 100"))
         .select("q", "seg", "cents")
@@ -5955,7 +5955,7 @@ def q_stats_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         # n from a direct row count of the input (cheaper than
         # re-executing the cumsum chain for max(cum)).
         n1 = col_df.agg(F.count("*").cast("bigint").alias("n"))
-        g = g.crossJoin(F.broadcast(n1))
+        g = g.crossJoin(n1)
         return g.filter(
             F.col("cum") >= F.expr("(n + 1) div 2")
         ).agg(
@@ -5964,14 +5964,14 @@ def q_stats_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     med = cached(lower_median(v, "cents"))  # 1 row
-    dev = v.crossJoin(F.broadcast(med)).select(
+    dev = v.crossJoin(med).select(
         F.abs(F.col("cents") - F.col("m")).alias("d")
     )
     mad = lower_median(dev, "d").select(
         F.col("m").alias("mad_cents")
     )
     return (
-        med.crossJoin(F.broadcast(mad))
+        med.crossJoin(mad)
         .select(
             "n",
             F.round(F.col("m") / 100.0, 4).alias("median"),
@@ -6132,7 +6132,7 @@ def q_stats_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = float(WILSON_Z)
     g = (
         o.join(
-            F.broadcast(c.select("c_custkey", "c_mktsegment")),
+            c.select("c_custkey", "c_mktsegment"),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy(F.col("c_mktsegment").alias("seg"))

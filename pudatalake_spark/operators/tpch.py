@@ -20,10 +20,12 @@ predicates documented per query:
 - no customer phone -> Q22's country code is c_nationkey itself.
 
 Scale notes (100 TB):
-- All dimension tables (region, nation, supplier at |S| ~ 1e6 rows
-  max) broadcast; the ONLY shuffles are the fact-fact
-  orders x lineitem joins on their shared order key and the final
-  small aggregations.
+- Small dimensions (region, nation, filtered dim sets) broadcast,
+  from the planner's size estimate or AQE's runtime size; the big
+  shuffles are the fact-fact orders x lineitem joins on their shared
+  order key. Joins to customer/supplier/part broadcast only while
+  those tables are under the threshold, except the supplier subsets
+  still hinted in Q2, Q5 and Q11 and Q20's qualified set.
 - Filters (dates, returnflag, mktsegment) are expressed on the base
   scans so Catalyst pushes them into parquet row-group pruning
   BEFORE the joins.
@@ -74,7 +76,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     asia_nations = (
         t["nation"]
         .join(
-            F.broadcast(t["region"].filter(F.col("r_name") == "ASIA")),
+            t["region"].filter(F.col("r_name") == "ASIA"),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("n_nationkey", "n_name")
@@ -164,7 +166,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cust = t["customer"].join(
-        F.broadcast(t["nation"]),
+        t["nation"],
         F.col("c_nationkey") == F.col("n_nationkey"),
     )
     return (
@@ -214,7 +216,7 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bad_supp = t["supplier"].filter(F.col("s_acctbal") < 0).select("s_suppkey")
     li = t["lineitem"].join(
-        F.broadcast(bad_supp),
+        bad_supp,
         F.col("l_suppkey") == F.col("s_suppkey"),
         "left_anti",
     )
@@ -345,7 +347,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     supply = (
         t["lineitem"]
         .join(
-            F.broadcast(p_keys),
+            p_keys,
             F.col("l_partkey") == F.col("p_partkey"),
             "left_semi",
         )
@@ -372,7 +374,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
     cand = (
-        supply.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        supply.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(euro), F.col("l_suppkey") == F.col("s_suppkey"))
         .select("p_partkey", "p_name", "s_name", "s_acctbal", "n_name",
                 "unit_cost")
@@ -521,7 +523,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = (
         t["customer"]
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
     li = t["lineitem"].filter(
@@ -534,7 +536,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .filter(F.col("supp_nation") != F.col("cust_nation"))
         .groupBy(
             "supp_nation",
@@ -626,13 +628,13 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot_vol = F.round(F.sum(vol), 4)
     return (
         t["lineitem"]
-        .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .join(
             o.select("o_orderkey", "o_custkey", "o_orderdate"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .join(cust, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             nat_vol.alias("nation_volume"),
@@ -690,12 +692,12 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         t["lineitem"]
-        .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .join(
             t["orders"].select("o_orderkey", "o_orderdate"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("nation", F.year("o_orderdate").alias("o_year"))
         .agg(F.round(F.sum(amount), 4).alias("sum_profit"))
     )
@@ -773,7 +775,7 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round(F.sum("val"), 4) * 2.0 / F.count("*")).alias("threshold")
     )
     return (
-        pv.crossJoin(F.broadcast(total))
+        pv.crossJoin(total)
         .filter(F.round(F.col("val"), 4) > F.col("threshold"))
         .select(
             F.col("l_partkey").alias("p_partkey"),
@@ -919,7 +921,7 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = F.round(F.sum(vol), 4)
     return (
         li.join(
-            F.broadcast(t["part"].select("p_partkey", "p_type")),
+            t["part"].select("p_partkey", "p_type"),
             F.col("l_partkey") == F.col("p_partkey"),
         )
         .agg(
@@ -976,10 +978,10 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     best = revenue.agg(F.max("total_revenue").alias("best_rev"))
     return (
-        revenue.crossJoin(F.broadcast(best))
+        revenue.crossJoin(best)
         .filter(F.col("total_revenue") == F.col("best_rev"))
         .join(
-            F.broadcast(t["supplier"].select("s_suppkey", "s_name")),
+            t["supplier"].select("s_suppkey", "s_name"),
             F.col("l_suppkey") == F.col("s_suppkey"),
         )
         .select("s_suppkey", "s_name", "total_revenue")
@@ -1023,7 +1025,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     pa = (
         t["lineitem"]
         .join(
-            F.broadcast(p),
+            p,
             F.col("l_partkey") == F.col("p_partkey"),
             "left_semi",
         )
@@ -1032,7 +1034,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         t["lineitem"]
-        .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .join(pa, F.col("pa_partkey") == F.col("l_partkey"))
         .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
         .agg(
@@ -1089,7 +1091,7 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .filter(branch)
         .agg(
             F.round(
@@ -1144,7 +1146,7 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < "1998-01-01")
         )
         .join(
-            F.broadcast(promo_parts),
+            promo_parts,
             F.col("l_partkey") == F.col("p_partkey"),
             "left_semi",
         )
@@ -1259,7 +1261,7 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(os, F.col("l_orderkey") == F.col("os_orderkey"))
         .filter((F.col("n_supp") >= 2) & (F.col("n_late_supp") == 1))
         .join(
-            F.broadcast(t["supplier"].select("s_suppkey", "s_name")),
+            t["supplier"].select("s_suppkey", "s_name"),
             F.col("l_suppkey") == F.col("s_suppkey"),
         )
         .groupBy("s_name")
@@ -1315,7 +1317,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") >= "1999-01-01"
     ).select("o_custkey")
     return (
-        pool.crossJoin(F.broadcast(thr))
+        pool.crossJoin(thr)
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
         .join(
             recent, F.col("c_custkey") == F.col("o_custkey"), "left_anti"

@@ -255,7 +255,7 @@ def q_win_percent_rank_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # N = number of PART ROWS (sum of per-value counts; total_name
     # would count distinct values).
     n1 = g.agg(F.sum("_c").cast("bigint").alias("_n"))
-    g = g.crossJoin(F.broadcast(n1))
+    g = g.crossJoin(n1)
     stats = g.select(
         "p_retailprice",
         F.when(
@@ -417,7 +417,7 @@ def q_win_cum_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     daily = (
         o.join(
-            F.broadcast(t["customer"].select("c_custkey", "c_mktsegment")),
+            t["customer"].select("c_custkey", "c_mktsegment"),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy(
@@ -1109,7 +1109,7 @@ def q_win_spc_xbar_r(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"max(n) div {SPC_SUBGROUP}").alias("nfull")
     )
     sub = (
-        idx.crossJoin(F.broadcast(nfull))
+        idx.crossJoin(nfull)
         .filter(F.col("sg") < F.col("nfull"))
         .groupBy("sg")
         .agg(
@@ -1127,7 +1127,7 @@ def q_win_spc_xbar_r(spark: SparkSession, sf_dir: str) -> DataFrame:
     ucl = F.col("xbb") + a2 * F.col("rb")
     lcl = F.col("xbb") - a2 * F.col("rb")
     return (
-        sub.crossJoin(F.broadcast(lim))
+        sub.crossJoin(lim)
         .select(
             F.col("sg").alias("subgroup"),
             F.round(xbar, 4).alias("xbar"),

@@ -261,7 +261,7 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("o_custkey").alias("cmin"), F.max("o_custkey").alias("cmax"),
         F.min("days").alias("dmin"), F.max("days").alias("dmax"),
     )
-    scaled = o.crossJoin(F.broadcast(stats)).select(
+    scaled = o.crossJoin(stats).select(
         "o_orderkey", "o_custkey", "days", "cmin", "cmax", "dmin", "dmax",
         ((F.col("o_custkey") - F.col("cmin")) * ((1 << ZBITS) - 1)
          / (F.col("cmax") - F.col("cmin"))).cast("bigint").alias("cx"),
