@@ -12,8 +12,10 @@ CLI; run it after any operator change.
 from __future__ import annotations
 
 import re
+from collections import Counter
+from typing import NamedTuple
 
-from .. import registry
+from .. import loaders, registry
 
 # name -> (must_contain regexes, must_NOT_contain regexes, why)
 RULES: dict[str, tuple[list[str], list[str], str]] = {
@@ -713,8 +715,8 @@ SIDE_EFFECT = {"src_csv", "src_json", "src_orc", "src_binaryfile", "src_text",
                "sink_overwrite_dynamic", "s_foreach_sink",
                "q_compact_small_files", "sink_zorder_cluster",
                "q_schema_evolution",
-               # Plan-audited via RULES; skipped in the global loop so
-               # their lake writes run once, not twice.
+               # Write the lake layout they then scan; plan-audited
+               # via RULES only.
                "q_scan_partition_pruned", "q_scan_dpp", "q_join_bucketed"}
 
 PY_EVAL_RX = re.compile(
@@ -764,25 +766,34 @@ BOUNDED_GLOBAL_WINDOW: dict[str, str] = {
 }
 
 # ---------------------------------------------------------------------------
-# Global rule #4 (r8, VERDICT r7 #1): EAGER driver actions inside
-# builders are part of the audited surface. A builder that calls
-# ``collect``/``count``/``toPandas``/eager ``localCheckpoint`` while
-# CONSTRUCTING its DataFrame executes a whole Spark job before the
-# returned plan exists - r7's audit could not see those subtrees,
-# which is exactly where q_graph_kcore's single-task K-pick sort hid.
-# The audit now monkey-patches the action methods for the duration of
-# every builder call, records (key, action, callsite, plan) for each
-# eager execution, applies global rules #1-#3 to every captured plan,
-# and FAILS if a key that performs eager actions is not declared
-# below. The declaration is per-operator and reviewed: each entry
-# states why the action count and the collected row volume are
-# bounded (fixpoint loops capped by constants, 1-row/``limit``ed
-# collects), never blanket. Scope: every non-streaming builder (s_*
-# keys run actual availableNow streams through their own writeStream
+# Global rule #4: jobs a builder runs while it BUILDS are audited like
+# the plan it returns. Each builder call runs under the job group
+# ``build:<key>`` (the tag perfbench uses); afterwards the audit reads
+# the group's new jobs from ``statusTracker`` and, for every SQL
+# execution that owns one, Spark's action name (the first frame of
+# ``details()``: ``Dataset.count``, ``Dataset.localCheckpoint``,
+# ``DataFrameWriter.parquet``) and its formatted final plan from the
+# SQL status store. That covers every action, write and checkpoint,
+# including a lazy ``localCheckpoint`` whose shuffle stages AQE runs
+# at the call. A job that no SQL execution owns (an RDD action, a
+# file-source schema read) has no plan; it is named after its result
+# stage (``job:parquet``). Every captured plan must pass rules #1-#3,
+# and every build-time job must come from a key declared for its kind:
+#
+# - writes (``DataFrameWriter*``): ``WRITES_AT_BUILD`` or ``SIDE_EFFECT``;
+# - checkpoints (``Dataset.localCheckpoint``/``checkpoint``):
+#   ``MATERIALIZES_AT_BUILD``;
+# - every other action, and every plan-less job:
+#   ``BOUNDED_DRIVER_ACTIONS``, with why its count and collected volume
+#   are bounded (fixpoint loops capped by constants, 1-row or
+#   ``limit``ed collects).
+#
+# An entry whose kind is never observed fails as stale. Streaming keys
+# (``s_*``) run availableNow queries through their own writeStream
 # machinery and stay out of the audit loop; their correctness surface
-# is the streaming-equivalence tests).
+# is the streaming-equivalence tests.
 
-#: key -> why its eager driver actions are bounded.
+#: key -> why its build-time driver actions are bounded.
 BOUNDED_DRIVER_ACTIONS: dict[str, str] = {
     "q_graph_kcore":
         "1-row K-pick collect (the pick subtree is the bucketed "
@@ -800,15 +811,31 @@ BOUNDED_DRIVER_ACTIONS: dict[str, str] = {
         "labels make sum a exact fixpoint signature; label frames "
         "stay distributed)",
     "q_dedup_eval":
-        "exactly 3 scalar counts (detected/truth/hits) over "
-        "localCheckpointed pair frames - the operator's output IS "
-        "these three numbers",
+        "exactly 3 scalar counts (detected/truth/hits) over the two "
+        "pair frames it localCheckpoints (MATERIALIZES_AT_BUILD) - "
+        "the operator's output IS these three numbers",
     "q_lake_wap_publish":
         "3-row audit-gate collect (the write-audit-publish decision "
         "is driver-side by contract)",
     "q_lake_clone_shallow":
         "4 scalar verification counts over the cloned vs source "
         "manifests (the operator's output is the equality report)",
+    "q_lake_manifest":
+        "one parquet schema-inference job reading the lineitem "
+        "footer (no SQL execution; mergeSchema off, so one footer at "
+        "any table size); the per-file manifest stays distributed",
+    "q_schema_evolution":
+        "one mergeSchema parquet schema-inference job over the two "
+        "written batch layouts (no SQL execution; one footer per "
+        "file, metadata-scale)",
+    "q_sql_script":
+        "the SQL script runs its statements at build: one SET "
+        "VARIABLE and the final GROUP BY, whose |o_orderpriority|-row "
+        "(5) result the script returns",
+    "src_json":
+        "one JSON schema-inference scan of the fixture the key has "
+        "just written (no SQL execution) - a fixture-sized ingest demo; "
+        "production ingest passes an explicit schema",
     "src_csv_malformed":
         "bounded ingest fixture: 150-row export collect to write "
         "the malformed CSV + permissive/dropmalformed scalar counts "
@@ -845,11 +872,10 @@ BOUNDED_DRIVER_ACTIONS: dict[str, str] = {
 #: keys whose builders legitimately WRITE at build time (scratch
 #: parquet layouts the returned frame then reads: lake-format
 #: simulations, layout demos, ingest fixtures). Distinct from
-#: SIDE_EFFECT (keys the audit's global loop must not re-run);
-#: membership here only authorizes the write - the written frame's
-#: plan is still checked against rules #1-#3. Populated from the r8
-#: capture enumeration; a write from any other key fails the audit
-#: as a hidden side effect.
+#: SIDE_EFFECT (keys the returned-plan rules skip); membership here
+#: only authorizes the write - the written frame's plan is still
+#: checked against rules #1-#3. A write from any other key fails the
+#: audit as a hidden side effect.
 WRITES_AT_BUILD: set[str] = {
     "q_lake_wap_publish",    # staging write + audited publish copy
     "q_lake_clone_shallow",  # source layout + manifest-clone write
@@ -859,184 +885,101 @@ WRITES_AT_BUILD: set[str] = {
     "src_xml",               # writes the XML fixture it then parses
 }
 
-#: infrastructure callsites (matched by REPO-RELATIVE source path -
-#: ADVICE r8: a basename match would exempt ANY file named
-#: loaders.py) allowed to run a bounded eager action on behalf of
-#: WHATEVER key triggered the load. The exemption applies only AFTER
-#: the record is attributed to a key; an eager action outside any
-#: builder is flagged regardless of callsite.
-INFRA_EAGER_FILES: dict[str, str] = {
-    "pudatalake_spark/loaders.py":
-        "limit-1 single-column dtype sniff on the rare raw-bigint "
-        "timestamp path (once per session/dir)",
+#: keys whose builders checkpoint at build time: an eager checkpoint,
+#: or a lazy one whose shuffle stages AQE runs at the call. The
+#: checkpointed frame's plan is checked against rules #1-#3; a
+#: checkpoint from any other key fails the audit.
+MATERIALIZES_AT_BUILD: set[str] = {
+    "q_agg_gini", "q_agg_lorenz_curve", "q_agg_quantile_bands",
+    "q_dedup_eval", "q_dedup_groups", "q_docs_length_outliers",
+    "q_embeddings_pca_power", "q_events_concurrent_peak",
+    "q_events_markov_stationary", "q_events_retention_fit",
+    "q_events_rfm", "q_events_session_duration_pctl",
+    "q_graph_assortativity", "q_graph_bfs_levels",
+    "q_graph_centralization", "q_graph_hits", "q_graph_jaccard_neighbors",
+    "q_graph_kcore", "q_graph_label_prop", "q_graph_louvain_round",
+    "q_graph_modularity", "q_graph_pagerank", "q_graph_reach_2hop",
+    "q_graph_triangles", "q_orders_priority_sla", "q_sim_cluster_nmi",
+    "q_sim_dim_truncation", "q_sim_ndcg", "q_sim_pq_adc",
+    "q_sim_rank_fusion", "q_sim_recall_eval", "q_stats_dkw_band",
+    "q_stats_hill_tail", "q_stats_kruskal_wallis", "q_stats_ks_test",
+    "q_stats_ks_uniformity", "q_stats_lift_gains", "q_stats_mad",
+    "q_stats_mannwhitney", "q_stats_qq_plot", "q_stats_sketch_error",
+    "q_stats_spearman", "q_stats_spearman_matrix", "q_stats_trimmed_mean",
+    "q_stats_weibull_fit", "q_stats_winsorized", "q_text_heaps_law",
+    "q_text_vocab_coverage", "q_win_ntile", "q_win_percent_rank_cume",
+    "q_win_skyline_2d",
 }
 
-#: DataFrame methods that execute jobs eagerly. ``take``/``head``/
-#: ``first`` funnel into ``collect`` via ``limit().collect()`` in
-#: PySpark, so ``collect`` covers them; ``show``/``tail``/
-#: ``toLocalIterator``/``foreach``/``foreachPartition`` do NOT funnel
-#: (showString / own JVM calls / RDD actions) and are patched
-#: explicitly (ADVICE r8 - an uncovered action would silently evade
-#: rule #4). Eager ``localCheckpoint`` and reliable ``checkpoint``
-#: (both eager by default) get dedicated wrappers; terminal
-#: ``DataFrameWriter`` AND ``DataFrameWriterV2`` methods are patched
-#: below. Known residual gap, documented not patched: raw
-#: ``df.rdd`` actions other than foreach* (the repo has none - RDDs
-#: are banned by SURVEY §1) and ``DataFrame.writeStream`` (s_* keys
-#: run outside the audit loop by design).
-EAGER_ACTION_METHODS = (
-    "collect", "count", "toPandas", "isEmpty",
-    "show", "tail", "toLocalIterator", "foreach", "foreachPartition",
-)
 
-#: terminal DataFrameWriter methods - a write executes the written
-#: frame's plan, so sink/lake builders' write plans are audited like
-#: returned plans (writes themselves are those keys' contract; the
-#: capture audits the PLAN feeding the write, not the side effect).
-EAGER_WRITER_METHODS = (
-    "save", "parquet", "csv", "json", "orc", "text",
-    "saveAsTable", "insertInto",
-)
+class BuildAction(NamedTuple):
+    """One piece of build-time work: a SQL execution, or a job that no
+    SQL execution owns (``plan`` is then empty)."""
 
-#: terminal DataFrameWriterV2 methods (``df.writeTo(...)`` chain) -
-#: same contract as EAGER_WRITER_METHODS (ADVICE r8).
-EAGER_WRITER_V2_METHODS = (
-    "create", "replace", "createOrReplace", "append", "overwrite",
-    "overwritePartitions",
-)
+    action: str  # "Dataset.count", "DataFrameWriter.parquet", "job:parquet"
+    jobs: int
+    plan: str
 
 
-class EagerCapture:
-    """Context manager: record (key, action, callsite, plan) for every
-    eager DataFrame action executed while a builder runs. ``holder``
-    is a 1-slot dict the audit loop updates with the key under
-    construction before each builder call."""
+def capture_build(spark, key: str, build):
+    """Run ``build()`` under job group ``build:<key>``; return its
+    result and the ``BuildAction`` list of the jobs it ran.
 
-    def __init__(self, records: list, holder: dict):
-        self.records = records
-        self.holder = holder
-        self._orig: dict[str, object] = {}
+    Read per build, not once at the end: the status stores keep only
+    the last 1000 jobs and SQL executions."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = spark._jsparkSession.sharedState().statusStore()
+    group = f"build:{key}"
+    seen = set(tracker.getJobIdsForGroup(group))
+    last = _newest_execution_id(store)
+    sc.setJobGroup(group, key)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(tracker.getJobIdsForGroup(group)) - seen
+    work = []
+    for eid in range(last + 1, _newest_execution_id(store) + 1):
+        e = store.execution(eid)
+        if not e.isDefined():
+            continue
+        e = e.get()
+        ids = e.jobs().keys().mkString(",")
+        owned = jobs & {int(j) for j in ids.split(",") if j}
+        if owned:
+            jobs -= owned
+            work.append(BuildAction(_action_name(e.details()), len(owned),
+                                    e.physicalPlanDescription()))
+    for j in sorted(jobs):
+        # Name a plan-less job after its result stage ("parquet at ...").
+        stage = tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds))
+        work.append(BuildAction(f"job:{stage.name.split()[0]}", 1, ""))
+    return out, work
 
-    @staticmethod
-    def _callsite() -> str:
-        """Nearest non-audit repo frame as a REPO-RELATIVE path
-        (``pudatalake_spark/loaders.py:123``) - basenames would make
-        the INFRA_EAGER_FILES exemption forgeable by filename
-        collision (ADVICE r8). ``<external>`` for frames outside the
-        package (tests, the audit loop itself)."""
-        import sys as _sys
 
-        f = _sys._getframe(2)
-        while f is not None:
-            fn = f.f_code.co_filename.replace("\\", "/")
-            idx = fn.rfind("pudatalake_spark/")
-            if idx >= 0 and "plans/audit" not in fn:
-                return f"{fn[idx:]}:{f.f_lineno}"
-            f = f.f_back
-        return "<external>"
+def _newest_execution_id(store) -> int:
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
 
-    def _wrap(self, name: str, orig):
-        records, holder, callsite = self.records, self.holder, self._callsite
 
-        def wrapped(df, *a, **kw):
-            try:
-                plan = explain_str(df)
-            except Exception:
-                plan = ""
-            records.append((holder.get("key"), name, callsite(), plan))
-            return orig(df, *a, **kw)
+def _action_name(details: str) -> str:
+    """First frame of an execution's ``details()`` -> action name:
+    ``...classic.Dataset.$anonfun$collectAsArrowToPython$1(...)`` ->
+    ``Dataset.collectAsArrowToPython``."""
+    cls, meth = details.split("(", 1)[0].rsplit(".", 2)[-2:]
+    return f"{cls}.{meth.removeprefix('$anonfun$').split('$')[0]}"
 
-        return wrapped
 
-    def _wrap_checkpoint(self, name: str, orig):
-        records, holder, callsite = self.records, self.holder, self._callsite
-
-        def wrapped(df, eager=True, *a, **kw):
-            if eager:
-                try:
-                    plan = explain_str(df)
-                except Exception:
-                    plan = ""
-                records.append(
-                    (holder.get("key"), name, callsite(), plan)
-                )
-            return orig(df, eager, *a, **kw)
-
-        return wrapped
-
-    @staticmethod
-    def _df_class():
-        # Spark 4 splits the public pyspark.sql.DataFrame ABC from
-        # the CONCRETE classic class, which overrides every action
-        # method - patching the base would capture nothing.
-        try:
-            from pyspark.sql.classic.dataframe import DataFrame
-        except ImportError:  # Spark 3.x layout
-            from pyspark.sql import DataFrame
-        return DataFrame
-
-    def _wrap_writer(self, name: str, orig):
-        records, holder, callsite = self.records, self.holder, self._callsite
-
-        def wrapped(writer, *a, **kw):
-            try:
-                plan = explain_str(writer._df)
-            except Exception:
-                plan = ""
-            records.append(
-                (holder.get("key"), f"write.{name}", callsite(), plan)
-            )
-            return orig(writer, *a, **kw)
-
-        return wrapped
-
-    def __enter__(self):
-        # Exception safety (ADVICE r8): if any import/patch fails
-        # after some methods were already wrapped, __exit__ never
-        # runs - restore what was patched before re-raising so the
-        # wrappers cannot leak process-wide.
-        self._worig = {}
-        self._w2orig = {}
-        try:
-            from pyspark.sql.readwriter import (
-                DataFrameWriter as _W,
-                DataFrameWriterV2 as _W2,
-            )
-
-            _DF = self._df_class()
-            for m in EAGER_ACTION_METHODS:
-                self._orig[m] = getattr(_DF, m)
-                setattr(_DF, m, self._wrap(m, self._orig[m]))
-            for m in ("localCheckpoint", "checkpoint"):
-                self._orig[m] = getattr(_DF, m)
-                setattr(_DF, m, self._wrap_checkpoint(m, self._orig[m]))
-            for m in EAGER_WRITER_METHODS:
-                self._worig[m] = getattr(_W, m)
-                setattr(_W, m, self._wrap_writer(m, self._worig[m]))
-            for m in EAGER_WRITER_V2_METHODS:
-                self._w2orig[m] = getattr(_W2, m)
-                setattr(_W2, m, self._wrap_writer(m, self._w2orig[m]))
-        except BaseException:
-            self.__exit__()
-            raise
-        return self
-
-    def __exit__(self, *exc):
-        if self._orig:
-            _DF = self._df_class()
-            for m, fn in self._orig.items():
-                setattr(_DF, m, fn)
-        if self._worig or self._w2orig:
-            from pyspark.sql.readwriter import (
-                DataFrameWriter as _W,
-                DataFrameWriterV2 as _W2,
-            )
-
-            for m, fn in self._worig.items():
-                setattr(_W, m, fn)
-            for m, fn in self._w2orig.items():
-                setattr(_W2, m, fn)
-        return False
+def _kind(action: str) -> str:
+    cls, _, meth = action.partition(".")
+    if cls.startswith("DataFrameWriter"):
+        return "write"
+    if meth in ("localCheckpoint", "checkpoint"):
+        return "checkpoint"
+    return "action"
 
 
 _TREE_NODE_RX = re.compile(
@@ -1051,8 +994,9 @@ def global_window_violations(plan: str) -> list[str]:
     Works on the operator-tree header: builds (depth, opname, id)
     rows, finds SinglePartition exchange ids from the detail
     sections, then walks each one's ancestor chain upward - skipping
-    Sort / WindowGroupLimit / Project - and reports if the first
-    structural ancestor is a Window."""
+    Sort / WindowGroupLimit / Project and the ShuffleQueryStage /
+    AQEShuffleRead nodes of an executed adaptive plan - and reports if
+    the first structural ancestor is a Window."""
     single_ids = set(
         re.findall(
             r"\((\d+)\) Exchange\nInput[^\n]*\nArguments: SinglePartition",
@@ -1083,7 +1027,8 @@ def global_window_violations(plan: str) -> list[str]:
             continue
         win_at = None
         for j, pop, pid in _ancestors(i):
-            if pop in ("Sort", "WindowGroupLimit", "Project"):
+            if pop in ("Sort", "WindowGroupLimit", "Project",
+                       "ShuffleQueryStage", "AQEShuffleRead"):
                 continue
             if pop == "Window":
                 win_at = (j, pid)
@@ -1123,7 +1068,7 @@ def explain_str(df) -> str:
 
 def _check_plan(name: str, plan: str, failures: list[str],
                 where: str = "") -> None:
-    """Global rules #1-#3 on one plan (returned or eager subtree)."""
+    """Global rules #1-#3 on one plan (returned or build-time)."""
     loc = f" ({where})" if where else ""
     if name not in UDF_KEYS and PY_EVAL_RX.search(plan):
         failures.append(
@@ -1146,21 +1091,37 @@ def _check_plan(name: str, plan: str, failures: list[str],
 def audit(spark, sf_dir: str):
     """Run every invariant; return (failures, evidence_sections).
 
-    Every builder call runs under ``EagerCapture`` (global rule #4):
-    eager driver actions executed at BUILD time are recorded with the
-    plan of the frame they acted on, those plans get the same global
-    rules as returned plans, and any key with eager actions must be
-    declared in ``BOUNDED_DRIVER_ACTIONS``."""
+    Every non-streaming key is built once, under ``capture_build``
+    (global rule #4): the jobs its builder runs are recorded with
+    their plans, those plans get the same global rules as returned
+    plans, and each kind of build-time job must be declared for the
+    key."""
     registry.load_all()
+    # Load outside any build, so the memoized dtype sniff is no key's job.
+    loaders.load(spark, sf_dir)
     failures: list[str] = []
     sections: list[str] = []
-    eager_records: list[tuple] = []
-    holder: dict = {}
+    work: dict[str, list[BuildAction]] = {}
 
-    with EagerCapture(eager_records, holder):
-        for name, (must, must_not, why) in sorted(RULES.items()):
-            holder["key"] = name
-            plan = explain_str(registry.QUERIES[name](spark, sf_dir))
+    # RULES keys first: their evidence plans are taken before other
+    # keys' actions materialize the cached frames they share.
+    names = sorted(RULES) + sorted(
+        k for k in registry.QUERIES
+        if k not in RULES and not k.startswith("s_")
+    )
+    for name in names:
+        fn = registry.QUERIES[name]
+        df, acts = capture_build(spark, name, lambda: fn(spark, sf_dir))
+        if acts:
+            work[name] = acts
+        # UDF and side-effect keys skip the global rules on the
+        # returned plan; their build-time plans are still checked.
+        checked = name not in UDF_KEYS and name not in SIDE_EFFECT
+        if name not in RULES and not checked:
+            continue
+        plan = explain_str(df)
+        if name in RULES:
+            must, must_not, why = RULES[name]
             for pat in must:
                 if not re.search(pat, plan):
                     failures.append(f"{name}: MISSING /{pat}/ ({why})")
@@ -1174,97 +1135,59 @@ def audit(spark, sf_dir: str):
             sections.append(
                 f"### `{name}`\n\n*Invariant: {why}.*\n\n```\n{tree}\n```\n"
             )
-
         # Global rule #1: no Python evaluation outside the UDF surface.
         # Global rule #2: no Exchange SinglePartition feeding
         # Sort+Window (a single-task global sort) outside the declared
         # bounded-frame exemptions.
-        # Global rule #3 (r7): no CartesianProduct ANYWHERE - every
+        # Global rule #3: no CartesianProduct ANYWHERE - every
         # intentional cross is a broadcast of a 1-row/bounded frame and
         # plans as BroadcastNestedLoopJoin; a true CartesianProduct
-        # means a non-equi join lost its broadcast hint (exactly how
-        # the r7 scan caught q_stats_sketch_error's 4-row probe).
-        # Global rule #4 (r8): UDF and side-effect builders that the
-        # returned-plan rules skip are still BUILT here, so their
-        # eager build-time subtrees enter the capture (keys in RULES
-        # already ran above - not re-built, keeping every lake write
-        # single-shot).
-        for name, fn in sorted(registry.QUERIES.items()):
-            if name.startswith("s_"):
-                continue
-            holder["key"] = name
-            if name in UDF_KEYS or name in SIDE_EFFECT:
-                if name not in RULES:
-                    fn(spark, sf_dir)  # build for eager capture only
-                continue
-            plan = explain_str(fn(spark, sf_dir))
+        # means a non-equi join lost its broadcast hint.
+        if checked:
             _check_plan(name, plan, failures)
-        holder["key"] = None
 
-    # Global rule #4 post-pass: every captured eager action must come
-    # from a declared key (or a declared infra callsite), and its
-    # subtree plan must satisfy the same global rules.
-    eager_summary: dict[str, dict[str, int]] = {}
-    for key, action, callsite, plan in eager_records:
-        # Outside-any-builder check FIRST (ADVICE r8): the infra
-        # exemption is only valid for actions attributable to a key.
-        if key is None:
-            failures.append(
-                f"eager {action} at {callsite} outside any builder"
-            )
-            continue
-        src = callsite.rsplit(":", 1)[0]  # repo-relative path
-        if src in INFRA_EAGER_FILES:
-            continue
-        if action.startswith("write."):
-            # Build-time writes are the CONTRACT of lake/sink/fixture
-            # keys - but a write from an undeclared key is a hidden
-            # side effect. The written frame's plan is still checked.
-            if key not in SIDE_EFFECT and key not in WRITES_AT_BUILD:
-                failures.append(
-                    f"{key}: UNDECLARED build-time {action} at "
-                    f"{callsite} - declare in WRITES_AT_BUILD (or "
-                    "SIDE_EFFECT) or make the builder read-only"
-                )
-        elif key not in BOUNDED_DRIVER_ACTIONS:
-            failures.append(
-                f"{key}: UNDECLARED eager {action} at {callsite} - "
-                "declare the bound in BOUNDED_DRIVER_ACTIONS or make "
-                "the builder lazy"
-            )
-        if plan:
-            _check_plan(key, plan, failures,
-                        where=f"eager {action} at {callsite}")
-        eager_summary.setdefault(key, {}).setdefault(
-            f"{action}@{callsite}", 0
-        )
-        eager_summary[key][f"{action}@{callsite}"] += 1
-    stale = sorted(set(BOUNDED_DRIVER_ACTIONS) - set(eager_summary))
-    if stale:
-        failures.append(
-            "BOUNDED_DRIVER_ACTIONS entries never observed (stale or "
-            f"mis-keyed): {', '.join(stale)}"
-        )
-    write_keys = {
-        k for k, calls in eager_summary.items()
-        if any(c.startswith("write.") for c in calls)
+    # Global rule #4 post-pass: every build-time job must come from a
+    # key declared for its kind, and its plan must satisfy rules #1-#3.
+    declared = {
+        "action": ("BOUNDED_DRIVER_ACTIONS", set(BOUNDED_DRIVER_ACTIONS)),
+        "write": ("WRITES_AT_BUILD", WRITES_AT_BUILD),
+        "checkpoint": ("MATERIALIZES_AT_BUILD", MATERIALIZES_AT_BUILD),
     }
-    stale_w = sorted(WRITES_AT_BUILD - write_keys)
-    if stale_w:
-        failures.append(
-            "WRITES_AT_BUILD entries never observed (stale or "
-            f"mis-keyed): {', '.join(stale_w)}"
-        )
-
-    lines = ["## Eager driver actions (global rule #4)", "",
-             "Captured at build time, plan-audited like returned "
-             "plans; bound declared per key in "
-             "`plans/audit.py::BOUNDED_DRIVER_ACTIONS`.", ""]
-    for key in sorted(eager_summary):
-        calls = ", ".join(
-            f"{c} x{n}" for c, n in sorted(eager_summary[key].items())
-        )
-        lines.append(f"- `{key}`: {calls}")
+    observed: dict[str, set[str]] = {kind: set() for kind in declared}
+    lines = ["## Build-time jobs (global rule #4)", "",
+             "Jobs each builder ran while building, read from its job "
+             "group `build:<key>` and the SQL status store; each SQL "
+             "execution is named by Spark's action and its final plan "
+             "passes rules #1-#3. `job:<name>` is a job no SQL execution "
+             "owns (no plan). Declared per key in `plans/audit.py`: "
+             "`BOUNDED_DRIVER_ACTIONS`, `WRITES_AT_BUILD`, "
+             "`MATERIALIZES_AT_BUILD`.", ""]
+    for key, acts in sorted(work.items()):
+        for a in acts:
+            if a.plan:
+                _check_plan(key, a.plan, failures,
+                            where=f"build-time {a.action}")
+        counts = Counter(a.action for a in acts)
+        for action in sorted(counts):
+            kind = _kind(action)
+            observed[kind].add(key)
+            decl, keys = declared[kind]
+            if key not in keys and not (
+                kind == "write" and key in SIDE_EFFECT
+            ):
+                failures.append(
+                    f"{key}: UNDECLARED build-time {action} - declare it "
+                    f"in {decl} or make the builder lazy"
+                )
+        calls = ", ".join(f"{c} x{n}" for c, n in sorted(counts.items()))
+        lines.append(f"- `{key}`: {sum(a.jobs for a in acts)} jobs: {calls}")
+    for kind, (decl, keys) in declared.items():
+        stale = sorted(keys - observed[kind])
+        if stale:
+            failures.append(
+                f"{decl} entries never observed (stale or mis-keyed): "
+                f"{', '.join(stale)}"
+            )
     lines.append("")
     sections.append("\n".join(lines))
 

@@ -1,167 +1,190 @@
-"""Unit tests for plan-audit global rule #4 (r8, VERDICT r7 #1): the
-EagerCapture context manager must see every driver action a builder
-executes at BUILD time - collect/count/toPandas/isEmpty and EAGER
-localCheckpoint - record the acting frame's physical plan, and
-attribute the call to its repo callsite, so tools/plan_audit.py can
-apply rules #1-#3 to eager subtrees and reject undeclared actions.
-The r7 blind spot this closes: q_graph_kcore's single-task K-pick
-sort ran before the returned DataFrame existed and was invisible to
-the returned-plan audit."""
+"""Unit tests for plan-audit global rule #4: ``capture_build`` must see
+every job a builder runs at BUILD time - actions, writes, eager and
+AQE-driven lazy checkpoints, and jobs no SQL execution owns - read
+from the builder's job group and Spark's SQL status store, with each
+execution's action name and final plan, so tools/plan_audit.py can
+apply rules #1-#3 to build-time plans and reject undeclared jobs."""
 
 from __future__ import annotations
 
-import pytest
+import contextlib
+import io
+import re
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pudatalake_spark import registry
 from pudatalake_spark.plans.audit import (
     BOUNDED_DRIVER_ACTIONS,
-    EagerCapture,
+    MATERIALIZES_AT_BUILD,
+    WRITES_AT_BUILD,
+    capture_build,
     global_window_violations,
 )
 
+from tests.conftest import SF_DIR
+
+
+def _actions(work):
+    return [a.action for a in work]
+
 
 def test_capture_records_actions_with_plans(spark):
-    records, holder = [], {"key": "q_fake"}
     df = spark.range(100).select("id", (F.col("id") % 7).alias("v"))
-    with EagerCapture(records, holder):
+
+    def build():
         df.count()
         df.limit(3).collect()  # take/head funnel through collect
-        df.localCheckpoint(eager=False)  # lazy: must NOT be recorded
-        holder["key"] = "q_fake2"
+        df.localCheckpoint(eager=False)  # no shuffle below: runs no job
         df.groupBy("v").count().isEmpty()
-    # after exit: actions are unpatched again
-    assert df.count() == 100
-    actions = [(k, a) for k, a, _, _ in records]
-    assert ("q_fake", "count") in actions
-    assert ("q_fake", "collect") in actions
-    assert ("q_fake2", "isEmpty") in actions
-    assert not any(a == "localCheckpoint" for _, a in actions)
-    # every record carries a plan; test-code frames are outside the
-    # package, so attribution is EXACTLY '<external>' (ADVICE r8: the
-    # old either-or assertion was satisfiable by the fallback alone)
-    for key, action, callsite, plan in records:
-        assert callsite == "<external>"
-        assert "== Physical Plan ==" in plan
 
-
-def test_callsite_attributes_package_frames(spark):
-    """The attribution path itself: an action issued from a frame
-    whose co_filename lives under pudatalake_spark/ must resolve to
-    that REPO-RELATIVE path (basename matching would let any file
-    named loaders.py borrow the infra exemption - ADVICE r8)."""
-    src = "def poke(df):\n    return df.count()\n"
-    ns: dict = {}
-    exec(compile(src, "/root/repo/pudatalake_spark/_synthetic.py",
-                 "exec"), ns)
-    records, holder = [], {"key": "q_fake"}
-    with EagerCapture(records, holder):
-        ns["poke"](spark.range(5))
-    assert [(k, a, c) for k, a, c, _ in records] == [
-        ("q_fake", "count", "pudatalake_spark/_synthetic.py:2")
+    _, work = capture_build(spark, "q_fake", build)
+    assert _actions(work) == [
+        "Dataset.count", "Dataset.collectToPython", "Dataset.isEmpty",
     ]
+    for a in work:
+        assert a.jobs >= 1
+        assert "== Physical Plan ==" in a.plan
+    # the group tag is cleared after the build: later jobs are no key's
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
 
 
 def test_extended_action_surface_is_captured(spark):
-    """show/tail/toLocalIterator/foreach/foreachPartition do NOT
-    funnel through collect (showString / own JVM calls / RDD
-    actions) and eager reliable checkpoint() executes a job - all
-    were rule-#4 blind spots until r9 (ADVICE r8)."""
-    records, holder = [], {"key": "q_surface"}
+    """show/tail/toLocalIterator do not funnel through collect, and
+    foreach/foreachPartition are RDD actions with no SQL execution;
+    eager reliable checkpoint() executes a job."""
     df = spark.range(20)
     spark.sparkContext.setCheckpointDir("/tmp/pudl_ckpt_test")
-    import contextlib
-    import io as _io
 
-    with EagerCapture(records, holder):
-        with contextlib.redirect_stdout(_io.StringIO()):
+    def build():
+        with contextlib.redirect_stdout(io.StringIO()):
             df.show(2)
         df.tail(2)
         list(df.toLocalIterator())
         df.foreach(lambda r: None)
         df.foreachPartition(lambda it: None)
         df.checkpoint()            # reliable, eager by default
-        df.checkpoint(eager=False)  # lazy: must NOT be recorded
-    actions = [a for _, a, _, _ in records]
-    for want in ("show", "tail", "toLocalIterator", "foreach",
-                 "foreachPartition"):
+        df.checkpoint(eager=False)  # no shuffle below: runs no job
+
+    _, work = capture_build(spark, "q_surface", build)
+    actions = _actions(work)
+    for want in ("Dataset.showString", "Dataset.tailToPython",
+                 "Dataset.toPythonIterator", "job:foreach",
+                 "job:foreachPartition"):
         assert want in actions, f"{want} evaded the capture"
-    assert actions.count("checkpoint") == 1
+    assert actions.count("Dataset.checkpoint") == 1
 
 
-def test_writer_v2_terminal_methods_are_captured(spark, tmp_path):
-    """df.writeTo(...).createOrReplace() executes the written frame's
-    plan like the v1 writer methods do - same audit contract."""
-    records, holder = [], {"key": "q_v2"}
+def test_writer_v2_terminal_methods_are_captured(spark):
+    """df.writeTo(...).create() executes the written frame's plan like
+    the v1 writer methods do - same audit contract."""
     spark.sql("CREATE DATABASE IF NOT EXISTS pudl_v2_test")
     spark.sql("DROP TABLE IF EXISTS pudl_v2_test.eager_capture_probe")
-    with EagerCapture(records, holder):
-        spark.range(7).writeTo(
+    _, work = capture_build(
+        spark, "q_v2",
+        lambda: spark.range(7).writeTo(
             "pudl_v2_test.eager_capture_probe"
-        ).using("parquet").create()
-    assert [(k, a) for k, a, _, _ in records] == [
-        ("q_v2", "write.create")
-    ]
-    assert "== Physical Plan ==" in records[0][3]
-    spark.sql("DROP TABLE IF EXISTS pudl_v2_test.eager_capture_probe")
-
-
-def test_enter_restores_on_partial_failure(spark, monkeypatch):
-    """__enter__ exception safety (ADVICE r8): a failure after some
-    methods were patched must restore them before re-raising -
-    otherwise the wrappers leak process-wide with no __exit__."""
-    from pudatalake_spark.plans import audit as audit_mod
-
-    _DF = EagerCapture._df_class()
-    before = {m: getattr(_DF, m) for m in audit_mod.EAGER_ACTION_METHODS}
-    # Poison the LAST v1-writer patch target so __enter__ fails after
-    # the DataFrame methods (and earlier writer methods) are wrapped.
-    monkeypatch.setattr(
-        audit_mod, "EAGER_WRITER_METHODS",
-        audit_mod.EAGER_WRITER_METHODS + ("no_such_method",),
+        ).using("parquet").create(),
     )
-    with pytest.raises(AttributeError):
-        EagerCapture([], {}).__enter__()
-    for m, fn in before.items():
-        assert getattr(_DF, m) is fn, f"{m} leaked a wrapper"
-    assert spark.range(3).count() == 3
+    assert _actions(work) == ["DataFrameWriterV2.create"]
+    assert "== Physical Plan ==" in work[0].plan
+    spark.sql("DROP TABLE IF EXISTS pudl_v2_test.eager_capture_probe")
 
 
 def test_captured_plan_exposes_single_task_sort(spark):
-    """The defect class rule #4 exists for: an eager action on a
+    """The defect class rule #4 exists for: an action on a
     global-order window is captured WITH the SinglePartition plan,
     so the audit post-pass can flag it."""
-    records, holder = [], {"key": "q_bad"}
     df = spark.range(1000).select(
         "id", (F.col("id") * 37 % 101).alias("v")
     )
     bad = df.withColumn(
         "r", F.row_number().over(Window.orderBy("v", "id"))
     )
-    with EagerCapture(records, holder):
-        # NOT a top-k filter: r==1 would be rewritten to
-        # TakeOrderedAndProject (no single-task sort left - verified
-        # r8); a lower-bound filter keeps the real Window plan.
-        bad.filter(F.col("r") > 5).count()
-    plans = [p for _, _, _, p in records if p]
-    assert plans, "eager collect must be captured"
+    # NOT a top-k filter: r==1 would be rewritten to
+    # TakeOrderedAndProject (no single-task sort left); a lower-bound
+    # filter keeps the real Window plan.
+    _, work = capture_build(
+        spark, "q_bad", lambda: bad.filter(F.col("r") > 5).count()
+    )
+    plans = [a.plan for a in work if a.plan]
+    assert plans, "the count must be captured"
     assert any(global_window_violations(p) for p in plans), (
-        "the captured subtree plan must show the single-task sort"
+        "the captured plan must show the single-task sort"
     )
 
 
+def test_single_task_window_under_lazy_checkpoint_is_flagged(spark):
+    """A lazy checkpoint over a global-order window runs its
+    SinglePartition shuffle at the call under AQE. Its status-store
+    plan puts a ShuffleQueryStage between the Exchange and the
+    Sort -> Window; rule #2 must flag the final plan itself, not only
+    its ``== Initial Plan ==`` copy."""
+    df = spark.range(1000).select(
+        "id", (F.col("id") * 37 % 101).alias("v")
+    )
+    bad = df.withColumn(
+        "r", F.row_number().over(Window.orderBy("v", "id"))
+    ).filter(F.col("r") > 5)
+    _, work = capture_build(
+        spark, "q_bad_ckpt", lambda: bad.localCheckpoint(eager=False)
+    )
+    assert _actions(work) == ["Dataset.localCheckpoint"]
+    plan = work[0].plan
+    assert "ShuffleQueryStage" in plan
+    final_windows = re.findall(
+        r"Window \((\d+)\)", plan.split("== Initial Plan ==")[0]
+    )
+    hits = global_window_violations(plan)
+    assert any(f"feeds Window ({w})" in h
+               for h in hits for w in final_windows), hits
+
+
 def test_eager_localcheckpoint_default_is_recorded(spark):
-    records, holder = [], {"key": "q_ck"}
-    df = spark.range(10)
-    with EagerCapture(records, holder):
-        df.localCheckpoint()  # default eager=True
-    assert [(k, a) for k, a, _, _ in records] == [
-        ("q_ck", "localCheckpoint")
+    _, work = capture_build(
+        spark, "q_ck", lambda: spark.range(10).localCheckpoint()
+    )
+    assert _actions(work) == ["Dataset.localCheckpoint"]
+
+
+def test_lazy_localcheckpoint_over_shuffle_is_recorded(spark):
+    """Under AQE a lazy localCheckpoint executes the adaptive plan at
+    the call, which runs every shuffle stage below the frame."""
+    df = spark.range(200).groupBy((F.col("id") % 5).alias("k")).count()
+    _, work = capture_build(
+        spark, "q_lazy", lambda: df.localCheckpoint(eager=False)
+    )
+    assert _actions(work) == ["Dataset.localCheckpoint"]
+    assert work[0].jobs >= 1
+    assert "== Final Plan ==" in work[0].plan
+    assert "Exchange" in work[0].plan
+
+
+def test_rdd_job_is_counted_without_plan(spark):
+    df = spark.range(50)
+    _, work = capture_build(spark, "q_rdd", lambda: df.rdd.count())
+    assert [(a.action, a.jobs, a.plan) for a in work] == [
+        ("job:count", 1, "")
     ]
+
+
+def test_pagerank_build_materializes_a_checkpoint(spark):
+    registry.load_all()
+    df, work = capture_build(
+        spark, "q_graph_pagerank",
+        lambda: registry.QUERIES["q_graph_pagerank"](spark, SF_DIR),
+    )
+    assert df.schema.fields
+    assert "Dataset.localCheckpoint" in _actions(work)
+    assert "q_graph_pagerank" in MATERIALIZES_AT_BUILD
 
 
 def test_bounded_driver_actions_entries_are_documented():
     for key, why in BOUNDED_DRIVER_ACTIONS.items():
         assert key.startswith(("q_", "src_", "sink_", "s_", "udf", "udtf"))
         assert len(why) > 20, f"{key}: bound must be a real sentence"
+    registry.load_all()
+    declared = (set(BOUNDED_DRIVER_ACTIONS) | WRITES_AT_BUILD
+                | MATERIALIZES_AT_BUILD)
+    assert declared <= set(registry.QUERIES), "declared key not registered"

@@ -67,6 +67,13 @@ def main() -> None:
             "   every intentional cross is a broadcast of a 1-row/bounded",
             "   frame (BroadcastNestedLoopJoin); a CartesianProduct means a",
             "   non-equi join lost its broadcast hint.",
+            "5. **Global rule #4**: every job a builder runs while it",
+            "   builds is captured from its job group `build:<key>` and",
+            "   Spark's SQL status store. Each build-time plan passes",
+            "   rules #1-#3, and each action, write or checkpoint comes",
+            "   from a key declared for it (`BOUNDED_DRIVER_ACTIONS`,",
+            "   `WRITES_AT_BUILD`, `MATERIALIZES_AT_BUILD`). The last",
+            "   section lists every such key with its build-time job count.",
             "",
         ] + sections + cost
         with open(os.path.join(REPO, "PLANS.md"), "w") as f:
