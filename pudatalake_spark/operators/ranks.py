@@ -195,7 +195,7 @@ def global_order(
     # Executor-loss caveat (applies to every superstep_checkpoint in
     # this repo): the DEFAULT strategy is localCheckpoint - blocks are
     # non-replicated, so losing an executor fails the job instead of
-    # recomputing, and they stay pinned for the session. On this
+    # recomputing, and they live until the next build. On this
     # single-JVM bench target that trade is pure win (one
     # materialization, no distributed-FS round-trip); on dynamic-
     # allocation / spot clusters set spark.pudatalake.checkpoint.dir

@@ -1103,12 +1103,7 @@ def audit(spark, sf_dir: str):
     sections: list[str] = []
     work: dict[str, list[BuildAction]] = {}
 
-    # RULES keys first: their evidence plans are taken before other
-    # keys' actions materialize the cached frames they share.
-    names = sorted(RULES) + sorted(
-        k for k in registry.QUERIES
-        if k not in RULES and not k.startswith("s_")
-    )
+    names = sorted(k for k in registry.QUERIES if not k.startswith("s_"))
     for name in names:
         fn = registry.QUERIES[name]
         df, acts = capture_build(spark, name, lambda: fn(spark, sf_dir))

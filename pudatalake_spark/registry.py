@@ -14,23 +14,40 @@ Determinism rules enforced by convention (SURVEY §5.2):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import Any
 
 QUERIES: dict[str, Callable[[Any, str], Any]] = {}
 ORACLES: dict[str, str] = {}
 
+# One process-wide list, not thread-local: foreachBatch callbacks run
+# on py4j threads.
+_HELD: list[Any] = []
+
 _LOADED = False
 
 
 def register(name: str, oracle: str | None = None):
-    """Decorator: register a (spark, sf_dir) -> DataFrame builder."""
+    """Decorator: register a (spark, sf_dir) -> DataFrame builder.
+
+    ``QUERIES[name]`` calls ``release()`` before the builder, so each
+    registered build frees what the previous one persisted or
+    checkpointed. The decorator returns the builder itself: a builder
+    that calls another by name nests inside one build and releases
+    nothing."""
 
     def deco(fn):
-        QUERIES[name] = fn
+        fn.query_name = name
+
+        @functools.wraps(fn)
+        def build(spark, sf_dir):
+            release()
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = build
         if oracle is not None:
             ORACLES[name] = oracle
-        fn.query_name = name
         return fn
 
     return deco
@@ -51,23 +68,35 @@ def load_all() -> None:
     _LOADED = True
 
 
-def clear_caches(spark: Any) -> None:
-    """Evict every persisted intermediate created by operator builders
-    (the loaders.cached handles). Spark's CacheManager keys on
-    canonicalized plans, so clearCache() drops them all at once; the
-    blocks are evictable MEMORY_AND_DISK, but a long-lived session
-    (pytest, the oracle driver, bench --all) accumulates one diamond
-    per dedup/similarity operator, so callers running many queries
-    should invoke this between them to bound peak storage memory.
+def hold(item: Any) -> None:
+    """Record an intermediate of the running build: a frame
+    ``loaders.cached`` persisted, or the ``(SparkContext, rdd id)`` of
+    a frame ``session.superstep_checkpoint`` checkpointed. An id, not
+    the frame, so superseded supersteps stay collectable."""
+    _HELD.append(item)
 
-    Deliberately does NOT call System.gc(): localCheckpoint blocks
-    (CC / PageRank supersteps) are freed by the ContextCleaner only
-    after a driver GC makes their RDDs unreachable, but forcing a
-    full STW collection between queries was MEASURED (r6) to cost
-    more than the stale blocks do (orig-16 9.0 s with forced GC vs
-    7.8 s without, at the same 32g heap); with a 32g heap the normal
-    G1 cycle reclaims them soon enough."""
-    spark.catalog.clearCache()
+
+def release() -> None:
+    """Free every intermediate recorded since the last release.
+
+    A frame a builder returns is valid until the next registered build
+    starts: after that, a frame that relied on ``cached()`` recomputes,
+    and one that relied on a local checkpoint fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. Intermediates of a stopped
+    SparkContext went with it and are skipped."""
+    held = _HELD[:]
+    del _HELD[: len(held)]
+    # Newest first: a frame cached over another cached frame is dropped
+    # before its input, so Spark has no dependent cache to re-plan.
+    for item in reversed(held):
+        if isinstance(item, tuple):
+            sc, rdd_id = item
+            if sc._jsc is not None:
+                rdd = sc._jsc.getPersistentRDDs().get(rdd_id)
+                if rdd is not None:
+                    rdd.unpersist(False)
+        elif item.sparkSession.sparkContext._jsc is not None:
+            item.unpersist()
 
 
 def queries() -> dict[str, Callable[[Any, str], Any]]:

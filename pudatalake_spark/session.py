@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .registry import hold
+
 # Runtime-settable (safe to apply to a session we did not create).
 RUNTIME_CONF = {
     # Determinism: all timestamp <-> string/epoch conversions in UTC,
@@ -176,8 +178,8 @@ def superstep_checkpoint(df, eager: bool = False):
       replication, no distributed-FS round-trip. Measured best on the
       bench box (eager ``persist()`` was WORSE: the cache boundary
       blocks codegen fusion + AQE, BASELINE.md r5). Caveat: blocks are
-      non-replicated and pinned for the session; losing an executor
-      fails the job instead of recomputing.
+      non-replicated; losing an executor fails the job instead of
+      recomputing.
     - ``spark.pudatalake.checkpoint.dir=<path>``: reliable
       ``checkpoint()`` into that directory (set once per session via
       ``sparkContext.setCheckpointDir``; the first dir wins - the JVM
@@ -192,6 +194,11 @@ def superstep_checkpoint(df, eager: bool = False):
       time or clean the directory themselves); files from a crashed
       driver always need external cleanup (SCALING.md §19).
 
+    The registry records the checkpointed RDD's id and unpersists it
+    when the next registered build starts (``registry.release``); a
+    superstep a fixpoint loop has superseded is freed earlier, by the
+    ContextCleaner once it is garbage.
+
     ``eager=False`` (default) defers only the job that writes the
     checkpoint blocks to the first downstream action. It does not keep
     the caller free of jobs: under AQE the checkpoint call executes the
@@ -204,13 +211,16 @@ def superstep_checkpoint(df, eager: bool = False):
     that gates a fixpoint loop.
     """
     spark = df.sparkSession
+    sc = spark.sparkContext
     ckdir = spark.conf.get(CHECKPOINT_DIR_CONF, "")
     if not ckdir:
-        return df.localCheckpoint(eager=eager)
-    sc = spark.sparkContext
-    if not sc._jsc.sc().getCheckpointDir().isDefined():
-        sc.setCheckpointDir(ckdir)
-    return df.checkpoint(eager=eager)
+        out = df.localCheckpoint(eager=eager)
+    else:
+        if not sc._jsc.sc().getCheckpointDir().isDefined():
+            sc.setCheckpointDir(ckdir)
+        out = df.checkpoint(eager=eager)
+    hold((sc, out._jdf.logicalPlan().rdd().id()))
+    return out
 
 
 def _default_heap() -> str:

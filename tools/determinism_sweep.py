@@ -59,9 +59,7 @@ def main() -> None:
     for name in sorted(registry.QUERIES):
         try:
             a = registry.QUERIES[name](spark, sf_dir).toPandas()
-            registry.clear_caches(spark)
             b = registry.QUERIES[name](spark, sf_dir).toPandas()
-            registry.clear_caches(spark)
             ka, kb = frame_key(a), frame_key(b)
             status = "ok" if ka == kb else "NONDETERMINISTIC"
             if status != "ok":
@@ -71,7 +69,6 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 - survey, keep going
             errs[name] = f"{type(e).__name__}: {str(e)[:160]}"
             print(f"  {name}: ERR {errs[name]}", flush=True)
-            registry.clear_caches(spark)
 
     out = os.path.join(REPO, "tools", f"determinism_{sfname}.json")
     with open(out, "w") as f:

@@ -12,7 +12,6 @@ spark = (SparkSession.builder.master("local[32]")
          .appName("driver-sim").getOrCreate())
 
 import __spark_entry__ as E
-from pudatalake_spark import registry as R
 
 t0 = time.time()
 df = E.entry(spark)
@@ -77,11 +76,6 @@ for name in sorted(Q):
         fails.append((name, f"EXC {type(e).__name__}: {str(e)[:200]}"))
         results[name] = {"status": "ERR", "detail": fails[-1][1]}
         print(f"  {name}: EXC {str(e)[:150]}")
-    finally:
-        # Bound peak storage memory: drop operator persist() caches
-        # before the next query (they are per-query diamonds, not
-        # cross-query reuse).
-        R.clear_caches(spark)
 
 print(f"\nT2: {ok} oracle-match, {rows_only} rows-only, {len(fails)} FAIL")
 for n, msg in fails:

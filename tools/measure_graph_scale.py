@@ -186,8 +186,6 @@ def main() -> None:
                       "wall_s": round(time.time() - t0, 2),
                       "error": str(e)[:300], **stats})
                 over_budget.add((key, mode))
-            finally:
-                registry.clear_caches(spark)
 
 
 if __name__ == "__main__":

@@ -127,8 +127,6 @@ def main() -> None:
                       "wall_s": round(time.time() - t0, 2),
                       "error": str(e)[:300]})
                 over.add(key)
-            finally:
-                registry.clear_caches(spark)
 
 
 if __name__ == "__main__":

@@ -78,10 +78,8 @@ def main() -> None:
         try:
             set_conf(defaults)
             a = registry.QUERIES[name](spark, sf_dir).toPandas()
-            registry.clear_caches(spark)
             set_conf(ADVERSE)
             b = registry.QUERIES[name](spark, sf_dir).toPandas()
-            registry.clear_caches(spark)
             ka, kb = frame_key(a), frame_key(b)
             if ka == kb:
                 print(f"  {name}: ok", flush=True)
@@ -100,7 +98,6 @@ def main() -> None:
             print(f"  {name}: ERR {errs[name]}", flush=True)
         finally:
             set_conf(defaults)
-            registry.clear_caches(spark)
 
     out = os.path.join(REPO, "tools", f"partition_sensitivity_{sfname}.json")
     with open(out, "w") as f:

@@ -306,7 +306,6 @@ def main() -> None:
             wall = round(time.time() - t0, 1)
         finally:
             sim.KNN_BITS_PER_BAND = old_bits
-            registry.clear_caches(spark)
         gt = ds.dataset(graph_path).to_table(
             filter=ds.field("src").isin(list(truth)),
             columns=["src", "dst"],

