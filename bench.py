@@ -21,13 +21,10 @@ cost that amortizes to nothing over a 100 TB run, which is the scale
 this engine targets. The median steady-state number is the one that
 extrapolates; sub-second queries on this box show +-20% run-to-run
 variance (BASELINE.md), which single-sample reporting turned into
-phantom regressions in r2. ``--all`` keeps one steady run per query
-(it is an inventory sweep, not the gate).
+phantom regressions in r2.
 
-Run the full registered inventory instead with ``--all`` (every
-registry query minus the side-effecting skips - the count is
-computed from the registry at runtime; slower, the headline set is
-the per-round gate).
+The whole registered inventory is timed by the census,
+``tools/bench_inventory.py``.
 """
 
 from __future__ import annotations
@@ -79,16 +76,6 @@ HEADLINE = [
     "q_agg_countmin",         # mergeable CMS build + broadcast probe
     "q_events_concurrent_peak",  # sessionize + boundary sweep
 ]
-
-# Side-effecting sink/ingest ops are excluded from --all timing: they
-# write temp dirs and measure the local disk, not the engine.
-SKIP_IN_ALL = {"src_csv", "src_json", "src_orc", "src_binaryfile", "src_text",
-               "sink_parquet_partitioned",
-               "sink_overwrite_dynamic", "s_foreach_sink",
-               "q_scan_partition_pruned", "q_scan_dpp", "q_join_bucketed",
-               "q_compact_small_files", "sink_zorder_cluster",
-               "q_schema_evolution"}
-
 
 def _force(df) -> int:
     """Fully materialize a DataFrame without driver collection."""
@@ -151,7 +138,6 @@ def main() -> None:
     load0 = [round(x, 2) for x in os.getloadavg()]
     stat0 = _cpu_stat()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    run_all = "--all" in sys.argv
     # sf number parsed from the dir name for the report line.
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -163,16 +149,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     registry.load_all()
 
-    names = (
-        [n for n in sorted(registry.QUERIES) if n not in SKIP_IN_ALL]
-        if run_all
-        else HEADLINE
-    )
-
     # Session warm-up: JVM/parquet-footer caches on a tiny action.
     _force(registry.QUERIES["q_agg_groupby"](spark, sf_dir))
 
-    n_steady = 1 if run_all else 3
+    n_steady = 3
 
     def _measure():
         """One full pass over the headline set; returns the per-query
@@ -182,7 +162,7 @@ def main() -> None:
         per_query: dict[str, float] = {}
         cold: dict[str, float] = {}
         samples: dict[str, list[float]] = {}
-        for name in names:
+        for name in HEADLINE:
             fn = registry.QUERIES[name]
             t0 = time.perf_counter()
             _force(fn(spark, sf_dir))  # warm run: codegen compile + JIT
@@ -208,11 +188,9 @@ def main() -> None:
     # exceeds SPARK_GRAFT_STEAL_MAX (default 0.3%; the r11 close run
     # recorded 0.06%). The kept pass is the quietest one (min steal,
     # ties to min total); every attempt's summary is recorded so a
-    # dirty artifact is self-describing. --all (census mode) has its
-    # own per-key healing in tools/bench_inventory.py and skips this.
+    # dirty artifact is self-describing.
     steal_max = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "0.3"))
-    steal_tries = 1 if run_all else int(
-        os.environ.get("SPARK_GRAFT_STEAL_TRIES", "3"))
+    steal_tries = int(os.environ.get("SPARK_GRAFT_STEAL_TRIES", "3"))
     attempts = []
     best = None
     for attempt in range(1, max(1, steal_tries) + 1):
@@ -243,7 +221,7 @@ def main() -> None:
         steal_gate["note"] = "steal unmeasurable on this box (/proc)"
 
     report = {
-        "metric": "headline_total_wall" if not run_all else "all_total_wall",
+        "metric": "headline_total_wall",
         "value": total,
         "unit": "sec",
         "queries": per_query,

@@ -772,9 +772,8 @@ def minhash_signature_frames(
     and the banded derivation; each returned frame is also typically
     consumed more than once by the caller). The next registered build
     releases them; a caller that signs many inputs within one build
-    (a foreachBatch probe, one pair per micro-batch) unpersists each
-    pair once it is consumed, or a long stream pins blocks without
-    bound.
+    (a foreachBatch probe, one pair per micro-batch) signs each inside
+    a ``registry.scope()``, which frees the pair at its end.
 
     This builder keeps FULL-corpus shingle arrays because the store
     contract needs them (any future probe candidate may verify
@@ -824,7 +823,9 @@ def cross_corpus_probe(
     reference store is signed ONCE per corpus version (build), each
     arriving batch signs only ITS docs and equi-joins the band
     store; per-batch cost is O(batch) signing + band-bucket join +
-    bounded verify, independent of how the reference grew."""
+    bounded verify, independent of how the reference grew. No
+    broadcast hint on ``cand``: under band skew it grows with the
+    reference store, so AQE picks the join from its runtime size."""
     cand = (
         b_banded.alias("a")
         .join(
@@ -844,7 +845,7 @@ def cross_corpus_probe(
             F.col("s").alias("s1"),
             F.size("s").alias("n1"),
         )
-        .join(F.broadcast(cand), "batch_doc")
+        .join(cand, "batch_doc")
         .join(
             ref_sh.select(
                 F.col("doc_id").alias("ref_doc"),

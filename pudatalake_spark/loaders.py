@@ -192,12 +192,12 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
 
 def cached(df: DataFrame) -> DataFrame:
     """persist() a diamond-shaped intermediate (both join branches read
-    it and exchange reuse does not recognize the diamond). The blocks
-    fill when the caller materializes the lazy result, so the builder
-    cannot unpersist them; the registry records the frame and frees it
-    when the next registered build starts (``registry.release``).
-    Default MEMORY_AND_DISK level: evictable, so pressure recomputes
-    instead of failing."""
+    it and exchange reuse does not recognize the diamond), and record
+    it with the registry. It is freed when the enclosing
+    ``registry.scope()`` exits, else when the next registered build
+    starts (``registry.release``): a returned frame fills the blocks
+    only when its caller materializes it. Default MEMORY_AND_DISK
+    level: evictable, so pressure recomputes instead of failing."""
     out = df.persist()
     hold(out)
     return out

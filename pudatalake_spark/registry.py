@@ -14,8 +14,9 @@ Determinism rules enforced by convention (SURVEY §5.2):
 
 from __future__ import annotations
 
+import contextlib
 import functools
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from typing import Any
 
 QUERIES: dict[str, Callable[[Any, str], Any]] = {}
@@ -69,23 +70,25 @@ def load_all() -> None:
 
 
 def hold(item: Any) -> None:
-    """Record an intermediate of the running build: a frame
+    """Record an intermediate of the running build or scope: a frame
     ``loaders.cached`` persisted, or the ``(SparkContext, rdd id)`` of
     a frame ``session.superstep_checkpoint`` checkpointed. An id, not
     the frame, so superseded supersteps stay collectable."""
     _HELD.append(item)
 
 
-def release() -> None:
-    """Free every intermediate recorded since the last release.
+def release(mark: int = 0) -> None:
+    """Free the intermediates recorded past ``mark``, newest first, and
+    forget them; a bare ``release()`` frees all of them.
 
-    A frame a builder returns is valid until the next registered build
-    starts: after that, a frame that relied on ``cached()`` recomputes,
-    and one that relied on a local checkpoint fails with
+    ``QUERIES[key]`` calls it before each build, so a frame a builder
+    returns is valid until the next registered build starts: after
+    that, a frame that relied on ``cached()`` recomputes, and one that
+    relied on a local checkpoint fails with
     ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. Intermediates of a stopped
     SparkContext went with it and are skipped."""
-    held = _HELD[:]
-    del _HELD[: len(held)]
+    held = _HELD[mark:]
+    del _HELD[mark : mark + len(held)]
     # Newest first: a frame cached over another cached frame is dropped
     # before its input, so Spark has no dependent cache to re-plan.
     for item in reversed(held):
@@ -97,6 +100,22 @@ def release() -> None:
                     rdd.unpersist(False)
         elif item.sparkSession.sparkContext._jsc is not None:
             item.unpersist()
+
+
+@contextlib.contextmanager
+def scope() -> Iterator[None]:
+    """Free, on exit (also by exception), what the body recorded.
+
+    For intermediates a build is done with before it returns: a
+    foreachBatch body's, or a phase's whose frames are written out.
+    Relies on the body running to its end before other code records:
+    one query's foreachBatch calls run one at a time, while the builder
+    blocks in ``awaitTermination``."""
+    mark = len(_HELD)
+    try:
+        yield
+    finally:
+        release(mark)
 
 
 def queries() -> dict[str, Callable[[Any, str], Any]]:

@@ -195,8 +195,8 @@ def superstep_checkpoint(df, eager: bool = False):
       driver always need external cleanup (SCALING.md §19).
 
     The registry records the checkpointed RDD's id and unpersists it
-    when the next registered build starts (``registry.release``); a
-    superstep a fixpoint loop has superseded is freed earlier, by the
+    when the enclosing ``registry.scope()`` exits, else when the next
+    registered build starts (``registry.release``); a superstep a fixpoint loop has superseded is freed earlier, by the
     ContextCleaner once it is garbage.
 
     ``eager=False`` (default) defers only the job that writes the

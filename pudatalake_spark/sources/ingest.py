@@ -18,8 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..loaders import table
-from ..registry import register
+from ..loaders import cached, table
+from ..registry import register, scope
 
 SCRATCH = os.environ.get("PUDL_SCRATCH", "/root/repo/.scratch")
 
@@ -394,18 +394,17 @@ def src_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark refuses _corrupt_record-only queries on the raw scan
     # (QUERY_ONLY_CORRUPT_RECORD_COLUMN); cache the parsed frame
     # first, exactly as the error message prescribes.
-    permissive = (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(out)
-        .cache()
-    )
-    perm_total = permissive.count()
-    perm_corrupt = permissive.filter(
-        F.col("_corrupt_record").isNotNull()
-    ).count()
-    permissive.unpersist()
+    with scope():
+        permissive = cached(
+            spark.read.schema(schema)
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt_record")
+            .csv(out)
+        )
+        perm_total = permissive.count()
+        perm_corrupt = permissive.filter(
+            F.col("_corrupt_record").isNotNull()
+        ).count()
     # Column pruning is the trap: count() parses NO data columns, so
     # DROPMALFORMED never drops and FAILFAST never fails (probed -
     # both modes only fire for columns the plan actually reads).

@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..loaders import table
-from ..registry import register
+from ..registry import register, scope
 from ..sources.ingest import SCRATCH
 
 EVENT_SCHEMA = T.StructType(
@@ -766,17 +766,12 @@ def s_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 2 == 0
     )
     store = _fresh("s_dedup_xc", "store")
-    ref_sh, ref_banded = minhash_signature_frames(ref)
-    ref_sh.write.mode("overwrite").parquet(os.path.join(store, "sh"))
-    ref_banded.write.mode("overwrite").parquet(
-        os.path.join(store, "bands")
-    )
-    # Build-side caches served their purpose (sh feeds both the sh
-    # write and the banded derivation); release the blocks before the
-    # stream starts instead of pinning them for the session (ADVICE
-    # r13 leak class).
-    ref_sh.unpersist()
-    ref_banded.unpersist()
+    with scope():
+        ref_sh, ref_banded = minhash_signature_frames(ref)
+        ref_sh.write.mode("overwrite").parquet(os.path.join(store, "sh"))
+        ref_banded.write.mode("overwrite").parquet(
+            os.path.join(store, "bands")
+        )
 
     src = stage_document_files(
         spark, sf_dir, "s_dedup_xc", parity=1
@@ -786,14 +781,9 @@ def s_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     def probe(batch_df, batch_id):
         ss = batch_df.sparkSession
         # The batch shingle frame is consumed twice (the verify join
-        # AND the banded derivation), so the internal cache still
-        # earns its keep per batch - but it is UNPERSISTED once the
-        # batch's write completes (r14, ADVICE r13): a foreachBatch
-        # loop that persists two new frames per micro-batch and
-        # never releases them pins storage blocks without bound over
-        # a long-running ingest stream.
-        b_sh, b_banded = minhash_signature_frames(batch_df)
-        try:
+        # AND the banded derivation), so it is worth caching per batch.
+        with scope():
+            b_sh, b_banded = minhash_signature_frames(batch_df)
             pairs = cross_corpus_probe(
                 b_sh,
                 b_banded,
@@ -808,9 +798,6 @@ def s_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
              .write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("batch_id").parquet(out))
-        finally:
-            b_sh.unpersist()
-            b_banded.unpersist()
 
     stream = (
         spark.readStream.schema(DOC_SCHEMA)

@@ -1,11 +1,16 @@
 """Lifetime of build intermediates: a registered build frees what the
 previous one persisted (``loaders.cached``) or checkpointed
 (``session.superstep_checkpoint``), so storage in a long session holds
-one build's worth of blocks (``registry.release``)."""
+one build's worth of blocks (``registry.release``), and a
+``registry.scope()`` frees what its body recorded."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark import StorageLevel
+
 from pudatalake_spark import registry
+from pudatalake_spark.loaders import cached
 
 from tests.conftest import SF_DIR, assert_frames_match
 
@@ -84,18 +89,59 @@ def test_nested_builders_release_nothing(spark, duck):
     assert not made & _persistent(spark)
 
 
-def test_stream_batch_caches_are_released(spark, monkeypatch):
-    """s_dedup_cross_corpus cache()s signature frames inside its
-    foreachBatch probe, which runs on a py4j thread. With the probe's
-    own unpersists disabled, release() still frees every one of them."""
+def test_stream_batches_free_their_own_frames(spark, monkeypatch):
+    """s_dedup_cross_corpus signs each micro-batch inside a
+    ``registry.scope()``: every batch of the drain sees the same number
+    of recorded frames, and the build ends with none of them recorded
+    and storage back at its start, with no ``release()`` call."""
+    from pudatalake_spark.llmops import dedup
+
     registry.load_all()
     registry.release()
     base_ids, base_blocks = _persistent(spark), _blocks(spark)
-    frame_cls = type(spark.range(1))
-    monkeypatch.setattr(frame_cls, "unpersist", lambda self, blocking=False: self)
+    held: list[int] = []
+    signed = []
+    probe = dedup.cross_corpus_probe
+
+    def recording_probe(b_sh, b_banded, ref_sh, ref_banded):
+        held.append(len(registry._HELD))
+        signed.extend([b_sh, b_banded])
+        return probe(b_sh, b_banded, ref_sh, ref_banded)
+
+    monkeypatch.setattr(dedup, "cross_corpus_probe", recording_probe)
     registry.QUERIES["s_dedup_cross_corpus"](spark, SF_DIR).collect()
-    monkeypatch.undo()
-    assert _blocks(spark) > base_blocks
-    registry.release()
+    assert len(held) >= 4, f"drain ran {len(held)} batches"
+    assert len(set(held)) == 1, f"recorded frames per batch: {held}"
+    assert not any(f is h for f in signed for h in registry._HELD)
     assert _blocks(spark) == base_blocks
     assert not _persistent(spark) - base_ids
+
+
+def _persisted(df) -> bool:
+    return df.storageLevel != StorageLevel.NONE
+
+
+def test_scope_frees_what_its_body_recorded(spark):
+    registry.release()
+    outer = cached(spark.range(10))
+    outer.count()
+    with registry.scope():
+        inner = cached(spark.range(20))
+        inner.count()
+        assert _persisted(inner)
+    assert not _persisted(inner)
+    assert _persisted(outer)
+
+    with pytest.raises(RuntimeError), registry.scope():
+        failed = cached(spark.range(30))
+        failed.count()
+        raise RuntimeError("inside the scope")
+    assert not _persisted(failed)
+    assert _persisted(outer)
+
+    with registry.scope():
+        early = cached(spark.range(40))
+        registry.release()
+        assert not _persisted(early)
+        assert not _persisted(outer)
+    assert registry._HELD == []
