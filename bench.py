@@ -83,38 +83,37 @@ def _force(df) -> int:
     return 0
 
 
+#: Load gate: 1-min loadavg ceiling, attempts, seconds between them.
+LOAD_MAX, LOAD_TRIES, LOAD_WAIT_S = 0.5, 3, 60.0
+#: Steal gate: % of a pass's CPU stolen, measured passes at most.
+STEAL_MAX_PCT, STEAL_TRIES = 0.3, 3
+
+
 def _load_gate() -> dict:
     """Load-gate (r10, VERDICT r9 #4): a loaded box inflates every
     sub-second query uniformly (BENCH_r09 went out at loadavg 3.56
     reading 28% worse than the same code on a quiet box), so a
     fleet-visible artifact must not encode box noise. Sample the
-    1-min loadavg BEFORE the session spins up; if it exceeds the
-    threshold, wait and retry (bounded). If every attempt fails, the
+    1-min loadavg BEFORE the session spins up; if it exceeds
+    LOAD_MAX, wait and retry (bounded). If every attempt fails, the
     bench still RUNS - the driver needs an artifact - but the report
     carries ``passed: false`` plus the full retry history, which is
-    the explicit annotated failure the round protocol asks for.
-    Tunables (env): SPARK_GRAFT_LOAD_MAX (default 0.5, <=0 disables),
-    SPARK_GRAFT_LOAD_TRIES (3), SPARK_GRAFT_LOAD_WAIT (60 s)."""
-    max_load = float(os.environ.get("SPARK_GRAFT_LOAD_MAX", "0.5"))
-    tries = int(os.environ.get("SPARK_GRAFT_LOAD_TRIES", "3"))
-    wait_s = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "60"))
+    the explicit annotated failure the round protocol asks for."""
     history = []
-    if max_load <= 0:
-        return {"passed": True, "disabled": True, "history": history}
-    for attempt in range(1, max(1, tries) + 1):
+    for attempt in range(1, LOAD_TRIES + 1):
         one_min = round(os.getloadavg()[0], 2)
         history.append(one_min)
-        if one_min <= max_load:
-            return {"passed": True, "threshold": max_load,
+        if one_min <= LOAD_MAX:
+            return {"passed": True, "threshold": LOAD_MAX,
                     "history": history}
-        if attempt <= tries - 1:
+        if attempt < LOAD_TRIES:
             print(
-                f"LOADGATE attempt {attempt}/{tries}: 1-min loadavg "
-                f"{one_min} > {max_load}, waiting {wait_s:.0f}s",
+                f"LOADGATE attempt {attempt}/{LOAD_TRIES}: 1-min loadavg "
+                f"{one_min} > {LOAD_MAX}, waiting {LOAD_WAIT_S:.0f}s",
                 flush=True,
             )
-            time.sleep(wait_s)
-    return {"passed": False, "threshold": max_load, "history": history}
+            time.sleep(LOAD_WAIT_S)
+    return {"passed": False, "threshold": LOAD_MAX, "history": history}
 
 
 def _cpu_stat() -> tuple[int, int] | None:
@@ -185,15 +184,13 @@ def main() -> None:
     # quiet-box close run read 0.83x - the loadavg gate alone cannot
     # see a hypervisor steal burst that lands DURING the run. Measure
     # steal across each full pass and re-measure (bounded) while it
-    # exceeds SPARK_GRAFT_STEAL_MAX (default 0.3%; the r11 close run
-    # recorded 0.06%). The kept pass is the quietest one (min steal,
-    # ties to min total); every attempt's summary is recorded so a
-    # dirty artifact is self-describing.
-    steal_max = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "0.3"))
-    steal_tries = int(os.environ.get("SPARK_GRAFT_STEAL_TRIES", "3"))
+    # exceeds STEAL_MAX_PCT (the r11 close run recorded 0.06%). The
+    # kept pass is the quietest one (min steal, ties to min total);
+    # every attempt's summary is recorded so a dirty artifact is
+    # self-describing.
     attempts = []
     best = None
-    for attempt in range(1, max(1, steal_tries) + 1):
+    for attempt in range(1, STEAL_TRIES + 1):
         per_query, cold, samples, steal = _measure()
         tot = round(sum(per_query.values()), 3)
         attempts.append({"steal_pct": steal, "total": tot,
@@ -202,19 +199,19 @@ def main() -> None:
                 per_query, cold, samples)
         if best is None or cand[:2] < best[:2]:
             best = cand
-        if steal is None or steal <= steal_max:
+        if steal is None or steal <= STEAL_MAX_PCT:
             break
-        if attempt < steal_tries:
-            print(f"STEALGATE attempt {attempt}/{steal_tries}: "
+        if attempt < STEAL_TRIES:
+            print(f"STEALGATE attempt {attempt}/{STEAL_TRIES}: "
                   f"{steal}% CPU stolen during the pass "
-                  f"(> {steal_max}%), re-measuring", flush=True)
+                  f"(> {STEAL_MAX_PCT}%), re-measuring", flush=True)
     _, total, per_query, cold, samples = best
     # ADVICE r12: if steal was never measurable (no /proc accounting),
     # passed must be null, not true - "unmeasured" != "clean".
     steal_unmeasured = all(a["steal_pct"] is None for a in attempts)
     steal_gate = {
-        "passed": None if steal_unmeasured else best[0] <= steal_max,
-        "threshold_pct": steal_max,
+        "passed": None if steal_unmeasured else best[0] <= STEAL_MAX_PCT,
+        "threshold_pct": STEAL_MAX_PCT,
         "attempts": attempts,
     }
     if steal_unmeasured:

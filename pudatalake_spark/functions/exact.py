@@ -50,25 +50,7 @@ def avg_exact_over(col: Column | str, window, scale: int = 100) -> Column:
     return F.sum(c).over(window) / (F.count(c).over(window) * float(scale))
 
 
-def avg_int(col: Column | str) -> Column:
-    """Exact average of an integer column: one double division."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c) / F.count(c)
-
-
 def sql_avg_exact(expr: str, scale: int = 100) -> str:
     """DuckDB twin of avg_exact (CAST kills HUGEINT promotion)."""
     c = f"CAST(round(({expr}) * {scale}, 0) AS BIGINT)"
     return f"(CAST(sum({c}) AS DOUBLE) / (count({c}) * {scale}.0))"
-
-
-def sql_avg_exact_over(expr: str, over: str, scale: int = 100) -> str:
-    c = f"CAST(round(({expr}) * {scale}, 0) AS BIGINT)"
-    return (
-        f"(CAST(sum({c}) OVER {over} AS DOUBLE)"
-        f" / (count({c}) OVER {over} * {scale}.0))"
-    )
-
-
-def sql_avg_int(expr: str) -> str:
-    return f"(CAST(sum({expr}) AS DOUBLE) / count({expr}))"

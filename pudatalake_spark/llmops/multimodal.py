@@ -7,9 +7,10 @@ feature-extraction runs as Arrow-batched pandas over mapInPandas.
 Decode is REAL for WAV / PNG / netpbm payloads via the pure-stdlib
 codecs in ``codecs.py`` (q_multimodal_decode_real encodes actual
 PNG/WAV bytes and decodes them back, oracle-verified). Formats that
-need absent codec libs (JPEG/MP3/MP4) remain the declared stub: sniff
-fails -> deterministic byte-value fake in _decode_payload, so the
-plumbing (schema, batching, partitioning, UDF signatures) still runs.
+need absent codec libs (JPEG/MP3/MP4) remain the declared stub:
+_extract_features takes the payload's byte values as its samples, so
+the plumbing (schema, batching, partitioning, UDF signatures) still
+runs.
 
 100 TB posture: binary payloads dominate bytes - keep them OUT of
 shuffles (extract features first, shuffle features only), store
@@ -93,42 +94,10 @@ _FEATURE_SCHEMA = T.StructType(
 )
 
 
-def _decode_payload(modality: str, content: bytes, try_real: bool = False):
-    """Decode step. With ``try_real``, payloads with a recognized
-    magic (WAV/PNG/netpbm) go through the REAL pure-stdlib codecs;
-    anything else falls back to the declared deterministic fake
-    (payload bytes as 'samples') so the feature plumbing is exercised
-    even for formats whose codec libs (JPEG/MP3/MP4) are absent.
-
-    ``try_real`` defaults to FALSE (ADVICE r4): the declared-stub
-    operator q_multimodal_decode feeds UTF-8 *document text* bytes
-    here and its oracle recomputes byte-value stats, so sniffing a
-    text that merely starts with 'P5'/'RIFF' into a real codec would
-    either raise mid-query or silently break the hash match. Real
-    decode belongs to callers that actually hold encoded media (the
-    *_real operators construct payloads and call codecs directly);
-    even with try_real, a sniff hit that fails to parse falls back to
-    the byte fake instead of failing the whole Arrow batch.
-    """
-    if try_real:
-        from . import codecs
-
-        try:
-            if codecs.sniff(bytes(content)) is not None:
-                d = codecs.decode(bytes(content))
-                arr = d["samples"] if d["format"] == "wav" else d["pixels"]
-                return [int(v) for v in arr.reshape(-1)]
-        except Exception:
-            pass  # magic matched but payload unparseable -> fake below
-    return list(content)  # fake "samples": the raw byte values
-
-
 def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas worker: Arrow batches in, feature rows out."""
     for pdf in batches:
-        samples = [
-            _decode_payload(m, c) for m, c in zip(pdf["modality"], pdf["content"])
-        ]
+        samples = [list(c) for c in pdf["content"]]  # the declared stub
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"].values,

@@ -1051,11 +1051,10 @@ KNN_PROBES = 2
 # disjoint block of KNN_BITS_PER_BAND dims into a 2^bits-way bucket.
 # 3 is the shipped fixture operating point (8 buckets/band); the
 # docstring's "at true scale use more sign bits per band" dial is now
-# a real constant - the 1M-vector feasibility probe
-# (tools/probe_knn_scale.py, SCALING sec 21) runs bits=10 (1024
-# buckets/band), because at N=1M a 3-bit bucket is ~N/8 = 125k rows
-# and the candidate volume stays quasi-quadratic. Requires
-# KNN_GRAPH_BANDS * bits <= vector dim.
+# a real constant - the 1M-vector feasibility probe (SCALING sec 21)
+# runs bits=10 (1024 buckets/band), because at N=1M a 3-bit bucket is
+# ~N/8 = 125k rows and the candidate volume stays quasi-quadratic.
+# Requires KNN_GRAPH_BANDS * bits <= vector dim.
 KNN_BITS_PER_BAND = 3
 # r10 tiled candidate generation: probe-side / index-side rows per
 # GEMM tile within a (band, bucket). 2048x4096 float64 score tiles
@@ -1109,7 +1108,7 @@ def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     index); exact cosine only on candidates; per-vector top-k via
     WindowGroupLimit inside the shuffle. Payload vectors join back
     once, pre-normed, AFTER pair dedup. The 1M-vector decade is
-    MEASURED (r12, SCALING sec 21 / tools/probe_knn_scale.py):
+    MEASURED (r12, SCALING sec 21):
     bits=10 builds the full 5M-row graph in 611 s with peak bucket
     1,273 rows (no memory cliff anywhere) at recall@5 0.293 on this
     near-isotropic corpus, bits=8 in 762 s at recall 0.529 (4x the
@@ -1371,7 +1370,7 @@ def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # an equi-join (adjacency), a bounded per-pivot all-pairs exact
 # re-score (groups of <= 2*NN_DESCENT_K+1 vectors, numpy GEMM inside
 # applyInPandas), and a per-src top-k window. Measured numbers live in
-# SCALING sec 21 / tools/probe_knn_scale.py --descent.
+# SCALING sec 21.
 #
 # The fixture-scale registered key (q_sim_knn_graph) is untouched:
 # at 500-2k vectors the one-shot banded build already reaches recall

@@ -237,16 +237,15 @@ def _default_heap() -> str:
 def get_spark(
     app_name: str = "pudatalake-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
 ) -> SparkSession:
     """Build (or get) a session with the engine's standard config."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(os.environ.get("PUDL_SHUFFLE_PARTITIONS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Heap default keyed on physical RAM, capped at the 32g that
         # measured best on the 128 GiB local[32] bench box (r6): the
         # old fixed 8g made a 20-query session GC-bound (orig-16

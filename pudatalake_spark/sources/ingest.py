@@ -21,7 +21,13 @@ from pyspark.sql import types as T
 from ..loaders import cached, table
 from ..registry import register, scope
 
-SCRATCH = os.environ.get("PUDL_SCRATCH", "/root/repo/.scratch")
+#: Scratch root for the source, sink and stream keys: ``$PUDL_SCRATCH``,
+#: else ``.scratch`` beside the imported package, so two checkouts never
+#: write or delete each other's files.
+SCRATCH = os.environ.get("PUDL_SCRATCH") or os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".scratch",
+)
 
 
 def _scratch(*parts: str) -> str:

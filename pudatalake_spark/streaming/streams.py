@@ -13,14 +13,9 @@ grouping key; watermarks bound state size by evicting windows older
 than max(event time) - delay. Checkpointing makes restarts
 exactly-once.
 
-API note (probed 2026-08-14): Spark 4's transformWithStateInPandas
-(the successor arbitrary-state API: typed ValueState/ListState,
-timers, RocksDB-backed) initializes a protobuf-based driver worker;
-this container lacks ``google.protobuf``, so the TWS runner crashes
-at init (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE). The
-arbitrary-state operators here therefore use applyInPandasWithState,
-which carries the same state-bound guarantees without the protobuf
-dependency; swap to TWS where the runtime has it.
+The arbitrary-state keys use applyInPandasWithState, not Spark 4's
+transformWithStateInPandas: the TWS Python runner needs
+``google.protobuf`` at init, and the engine does not depend on it.
 """
 
 from __future__ import annotations
@@ -227,11 +222,6 @@ def s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("s_stream_dedup")
 
 
-def _running_agg(pdf_iter):
-    for pdf in pdf_iter:
-        yield pdf
-
-
 @register("s_stateful_running")
 def s_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary stateful per-user aggregate via applyInPandasWithState:
@@ -283,92 +273,6 @@ def s_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tbl.groupBy("user_id").agg(
         F.max(F.struct("n_events", "sum_value")).alias("final")
     ).select("user_id", "final.n_events", "final.sum_value")
-
-
-def tws_available() -> bool:
-    """True when transformWithStateInPandas can run here: the TWS
-    Python runner speaks protobuf to the JVM, so it needs
-    ``google.protobuf`` (absent in this container - probed r5/r6/r11/r12,
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE at init)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def s_stateful_running_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """transformWithStateInPandas twin of s_stateful_running - the
-    Spark 4 successor arbitrary-state API (typed ValueState handles,
-    timers, RocksDB-backed stores) expressing the identical
-    per-user (count, sum) running aggregate.
-
-    NOT in the registry: SURVEY §2's streaming contract is carried by
-    s_stateful_running (applyInPandasWithState), which runs in this
-    container; this twin exists so the streaming surface tracks the
-    current API generation and activates wherever the runtime has
-    protobuf (tests/test_streaming.py gates on tws_available() and
-    asserts batch equivalence there). Same semantics, same scale
-    posture: state partitioned by user_id in the executor state
-    store, bounded per key, no driver state.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    src = stage_event_files(spark, sf_dir, "s_stateful_running_tws")
-    stream = read_event_stream(spark, src)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("sum_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.DoubleType()),
-        ]
-    )
-
-    class RunningAgg(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = self._agg.get() if self._agg.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._agg.update((n, s))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [round(s, 4)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    result = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningAgg(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-    run_to_memory(result, "s_stateful_running_tws", "update")
-    tbl = spark.table("s_stateful_running_tws")
-    return (
-        tbl.groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "sum_value")).alias("final"))
-        .select("user_id", "final.n_events", "final.sum_value")
-    )
 
 
 @register("s_foreach_sink")

@@ -85,33 +85,6 @@ def test_stateful_running_final_equals_batch(spark):
     assert_frames_match(stream_pdf, batch_pdf, "s_stateful_running≡batch")
 
 
-def test_stateful_running_tws_twin(spark):
-    """transformWithStateInPandas twin (Spark 4 successor API) must
-    produce the identical per-user final state. Skips where the TWS
-    Python runner's protobuf dependency is absent (this container -
-    the probe result is pinned in streams.py's module docstring)."""
-    import pytest
-
-    from pudatalake_spark.streaming.streams import (
-        s_stateful_running_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("transformWithStateInPandas needs google.protobuf")
-    stream_pdf = s_stateful_running_tws(spark, SF_DIR).toPandas()
-    batch_pdf = (
-        table(spark, SF_DIR, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .toPandas()
-    )
-    assert_frames_match(stream_pdf, batch_pdf, "s_stateful_running_tws≡batch")
-
-
 def test_foreach_sink_roundtrip_counts(spark):
     _sdf = registry.QUERIES["s_foreach_sink"](spark, SF_DIR)
     assert_driver_canon_safe(_sdf.schema, "s_foreach_sink")

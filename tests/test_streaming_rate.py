@@ -27,6 +27,7 @@ in ``finally``. Marked slow: each test runs ~5-15 s of real stream.
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
 
@@ -34,11 +35,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from pudatalake_spark.sources.ingest import SCRATCH
+
 pytestmark = pytest.mark.slow
 
 
 def _scratch_ckpt():
-    return f"/root/repo/.scratch/rate_smoke/{uuid.uuid4().hex}"
+    return os.path.join(SCRATCH, "rate_smoke", uuid.uuid4().hex)
 
 
 def _run_until_state_batches(q, min_batches=3, deadline_s=90, until=None):

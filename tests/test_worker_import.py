@@ -12,6 +12,7 @@ running a mapInPandas-backed inventory key end-to-end.
 from __future__ import annotations
 
 import os
+import shutil
 import subprocess
 import sys
 
@@ -95,3 +96,33 @@ def test_mapinpandas_key_survives_chdir_after_session_create():
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "WORKER_IMPORT_OK_CHDIR" in proc.stdout
+
+
+# Scratch root of a second checkout: with PUDL_SCRATCH unset, the
+# source/sink/stream keys must write beside the package they were
+# imported from, never into another checkout's tree.
+SCRATCH_SNIPPET = """
+from pudatalake_spark.sources import ingest
+print(ingest.SCRATCH)
+"""
+
+
+def test_scratch_defaults_beside_imported_package(tmp_path):
+    shutil.copytree(
+        os.path.join(REPO, "pudatalake_spark"),
+        tmp_path / "pudatalake_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    env = dict(os.environ)
+    env.pop("PUDL_SCRATCH", None)
+    env.pop("PYTHONPATH", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", SCRATCH_SNIPPET],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().splitlines()[-1] == str(tmp_path / ".scratch")

@@ -25,8 +25,8 @@ committed artifact carried two 4-5x contaminated rows that had to be
 re-measured by hand).  A census is only round-over-round comparable
 if contaminated rows never land in it, so each key now self-heals:
 steal jiffies are sampled around EVERY key, and a key is re-run (up
-to ``--max-reruns``, default 2) when its wall exceeds
-``--rerun-factor`` (default 3) x its previous committed census value
+to MAX_RERUNS times) when its wall exceeds RERUN_FACTOR x its
+previous committed census value
 OR when measurable steal (>0.5% of the key's window) was stamped on a
 key slower than 1 s with no prior.  The committed number is the MIN
 of the samples (the quietest observation of a fixed plan); every
@@ -57,12 +57,6 @@ STEAL_MIN_WALL = 1.0
 STEAL_MIN_PCT = 0.5
 
 
-def _flag(name: str, default: float) -> float:
-    if name in sys.argv:
-        return float(sys.argv[sys.argv.index(name) + 1])
-    return default
-
-
 def main() -> None:
     args = [
         a
@@ -76,8 +70,6 @@ def main() -> None:
     else:
         sfname = sf_dir.rstrip("/").rsplit("/", 1)[-1]
         out = os.path.join(REPO, "tools", f"spark_times_{sfname}.json")
-    rerun_factor = _flag("--rerun-factor", RERUN_FACTOR)
-    max_reruns = int(_flag("--max-reruns", MAX_RERUNS))
 
     import bench as _b
     stat0 = _b._cpu_stat()
@@ -128,8 +120,8 @@ def main() -> None:
             continue
         samples, steals = [wall], [steal]
         ref = prior.get(name)
-        while len(samples) <= max_reruns:
-            inflated_vs_prior = ref is not None and min(samples) > rerun_factor * ref
+        while len(samples) <= MAX_RERUNS:
+            inflated_vs_prior = ref is not None and min(samples) > RERUN_FACTOR * ref
             burst_no_prior = (
                 ref is None
                 and min(samples) >= STEAL_MIN_WALL
@@ -157,7 +149,7 @@ def main() -> None:
                 "samples": samples,
                 "steal_pct": steals,
                 "prior": ref,
-                "resolved": ref is None or times[name] <= rerun_factor * ref,
+                "resolved": ref is None or times[name] <= RERUN_FACTOR * ref,
             }
             tag = "HEALED" if healing[name]["resolved"] else "UNRESOLVED"
             print(f"  {name}: {times[name]} [{tag} after {len(samples)} runs: {samples}]")
@@ -191,9 +183,9 @@ def main() -> None:
             "sf_dir": sf_dir,
             "protocol": (
                 "noop-sink, caches cleared per key; self-healing: keys "
-                f">{rerun_factor}x their previous census (or stamped with "
+                f">{RERUN_FACTOR}x their previous census (or stamped with "
                 "a steal burst, no prior) re-run up to "
-                f"{max_reruns}x, min kept"
+                f"{MAX_RERUNS}x, min kept"
             ),
             "cpu_steal_pct": steal,
             "census_vs_prev": census_vs_prev,
@@ -210,7 +202,7 @@ def main() -> None:
               f"({census_vs_prev['cur_total_s']}s vs "
               f"{census_vs_prev['prev_total_s']}s)")
     if unresolved:
-        print(f"UNRESOLVED (still >{rerun_factor}x prior after retries — "
+        print(f"UNRESOLVED (still >{RERUN_FACTOR}x prior after retries — "
               f"re-measure or accept as real): {unresolved}")
     print(f"total spark wall: {sum(times.values()):.1f}s")
     print("slowest 25:")
