@@ -1,22 +1,27 @@
 """Table loaders: parquet dir -> dict of DataFrames + temp views.
 
-The lake layout is one parquet file/dir per table (TESTDATA.md:13-15).
-Loading is plan-only (no I/O until an action), so re-loading per query
-call is cheap; we still memoize per (session, dir) to avoid re-running
-schema inference and view registration on every call.
+The lake layout is one parquet file or directory per table
+(TESTDATA.md:13-15). A single-file table's schema is read from its
+footer on the driver (``parquet_reader``), so loading a lake of files
+runs no Spark job; a directory table keeps Spark's inference, one job
+per table. Inference cost 10 jobs and about 1.1 s per lake load
+(docs/SCALING.md §27).
 
-100 TB posture: ``spark.read.parquet`` scales to multi-file
-partitioned directories unchanged; scans get column pruning +
-predicate pushdown from Catalyst as long as callers select/filter on
-native columns (SURVEY §4).
+100 TB posture: one footer read per single-file table, and one
+inference job (one footer, mergeSchema off) per directory table,
+whatever its size. Scans get column pruning and predicate pushdown
+from Catalyst as long as callers select/filter on native columns
+(SURVEY §4).
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import _parse_datatype_json_string
 
 from .registry import hold
 from .session import ensure_conf
@@ -34,8 +39,9 @@ TABLES = [
     "embeddings",
 ]
 
-# Keyed by (java session object id, sf_dir); values are dicts of DataFrames.
-_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
+# The last lake ``load`` read: (session, dir, frames). The temp views
+# of that session point at these frames.
+_LOADED: tuple[SparkSession, str, dict[str, DataFrame]] | None = None
 
 
 # Timestamp-typed columns per table. The generator has re-encoded
@@ -72,7 +78,7 @@ def _sniff_bigint_ts_unit(df: DataFrame, c: str) -> str:
     pairwise disjoint, so the sample lands in exactly one — or in
     none, which RAISES instead of guessing. The probe is a limit-1
     scan of a single column (first row group only, once per
-    session/dir, only on the rare bigint path), never a full scan.
+    ``load`` miss, only on the rare bigint path), never a full scan.
     """
     from pyspark.sql import functions as F
 
@@ -136,27 +142,67 @@ def _normalize_ts(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     return df
 
 
+def parquet_reader(spark: SparkSession) -> Callable[[str], DataFrame]:
+    """Return ``read(path)``, a scan of one parquet table.
+
+    For a single file, the driver reads the footer and Spark's own
+    converter maps it under the session's confs (``nanosAsLong``,
+    TIMESTAMP_NTZ inference), the mapping inference runs in its job;
+    the scan declares that schema and runs no job. Any other path (a
+    directory, or a missing one) goes to ``spark.read.parquet``: one
+    inference job, or Spark's own error. The returned function shares
+    one Hadoop conf and one converter across calls."""
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = parquet.ParquetToSparkSchemaConverter(state.conf())
+    skip_row_groups = (
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    )
+
+    def read(path: str) -> DataFrame:
+        p = jvm.org.apache.hadoop.fs.Path(path)
+        if not p.getFileSystem(hconf).isFile(p):
+            return spark.read.parquet(path)
+        meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            hconf, p, skip_row_groups
+        )
+        schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(p, meta), converter
+        )
+        return spark.read.schema(_parse_datatype_json_string(schema.json())).parquet(path)
+
+    return read
+
+
 def load(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all tables under sf_dir and register them as temp views."""
+    """Load all tables under sf_dir and register them as temp views.
+
+    A single-file table loads with no Spark job; a directory table
+    with Spark's inference (``parquet_reader``). The memo holds one
+    entry, the last lake loaded: only this function registers the
+    table views, so a hit means this session's views already point at
+    this lake, and it returns without touching the catalog. A miss
+    reads the lake, re-points the views and replaces the entry, so
+    after ``load(a); load(b); load(a)`` the SQL-text operators read
+    ``a`` again. A frame returned for an earlier lake stays valid: it
+    names its own files, not the views."""
+    global _LOADED
     ensure_conf(spark)
-    key = (id(spark), sf_dir.rstrip("/"))
-    if key in _CACHE:
-        # Re-register views even on a memo hit: views are GLOBAL per
-        # session, so after load(dir_a); load(dir_b); load(dir_a) the
-        # SQL-text operators (q_scd2_build, q_subquery_*, q_events_*)
-        # would otherwise silently read dir_b's tables.
-        # createOrReplaceTempView is plan-only and costs ~nothing.
-        for name, df in _CACHE[key].items():
-            df.createOrReplaceTempView(name)
-        return _CACHE[key]
+    sf_dir = sf_dir.rstrip("/")
+    if _LOADED is not None and _LOADED[0] is spark and _LOADED[1] == sf_dir:
+        return _LOADED[2]
+    _LOADED = None  # the views stop matching any entry from here on
+    read = parquet_reader(spark)
     dfs: dict[str, DataFrame] = {}
     for name in TABLES:
-        df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+        df = read(f"{sf_dir}/{name}.parquet")
         if name in TS_COLUMNS:
             df = _normalize_ts(df, TS_COLUMNS[name])
         df.createOrReplaceTempView(name)
         dfs[name] = df
-    _CACHE[key] = dfs
+    _LOADED = (spark, sf_dir, dfs)
     return dfs
 
 

@@ -30,7 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..loaders import load, table
+from ..loaders import load, parquet_reader, table
 from ..registry import register
 from ..sources.ingest import _scratch
 
@@ -433,9 +433,11 @@ def q_lake_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     each file's share of the table.
 
     Plan shape: metadata columns are populated by the scan itself -
-    no extra I/O pass; one small agg per file. Rows-only (paths are
-    machine-local), but deterministic per environment."""
-    li = spark.read.parquet(f"{sf_dir.rstrip('/')}/lineitem.parquet")
+    no extra I/O pass; one small agg per file. The scan declares the
+    schema read from the file's footer (``parquet_reader``), so the
+    build runs no job. Rows-only (paths are machine-local), but
+    deterministic per environment."""
+    li = parquet_reader(spark)(f"{sf_dir.rstrip('/')}/lineitem.parquet")
     per_file = (
         li.select(
             F.col("_metadata.file_name").alias("file_name"),

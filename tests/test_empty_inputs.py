@@ -45,8 +45,7 @@ def empty_sf(spark):
         pq.write_table(tbl.slice(0, 0), f"{EMPTY_DIR}/{t}.parquet")
     yield EMPTY_DIR
     # The sweep re-pointed the session's temp views at the empty
-    # tables; restore them for any test that runs after this module.
-    loaders._CACHE.clear()
+    # tables; loading SF_DIR again points them back.
     loaders.load(spark, SF_DIR)
 
 

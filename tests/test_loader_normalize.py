@@ -16,13 +16,20 @@ pre-driver.
 from __future__ import annotations
 
 import datetime
+import decimal
+import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pudatalake_spark.loaders import _normalize_ts, load
+from pudatalake_spark.loaders import TABLES, _normalize_ts, load, parquet_reader
+from pudatalake_spark.plans.audit import capture_build
+
+from tests.conftest import SF_DIR
 
 # Three instants with sub-second parts, as epoch-nanoseconds.
 EPOCH_NANOS = [
@@ -161,3 +168,96 @@ def test_load_events_ts_is_timestamp(spark):
     assert isinstance(
         t["events"].select("ts").first()["ts"], datetime.datetime
     )
+
+
+TESTDATA_SFS = [os.path.join(os.path.dirname(SF_DIR), f"sf{sf}") for sf in ("0.001", "0.01", "0.1")]
+
+# Column types beyond the timestamp encodings that the footer read
+# must map exactly as Spark's inference does.
+FOOTER_TYPES = {
+    **ENCODINGS,
+    "date32": pa.array([datetime.date(1995, 1, d) for d in (1, 2, 3)], pa.date32()),
+    "decimal": pa.array([decimal.Decimal("1.25")] * 3, pa.decimal128(12, 2)),
+    "uint32": pa.array([1, 2, 3], pa.uint32()),
+    "int8": pa.array([1, 2, 3], pa.int8()),
+    "binary": pa.array([b"a", b"b", b""], pa.binary()),
+    "list": pa.array([[1], [], None], pa.list_(pa.int32())),
+    "map": pa.array([[("a", 1)], [], None], pa.map_(pa.string(), pa.int32())),
+    "struct": pa.array([{"x": 1, "y": "a"}] * 3,
+                       pa.struct([("x", pa.int64()), ("y", pa.string())])),
+}
+
+
+@pytest.mark.parametrize(
+    "source",
+    [f"{sf}/{t}" for sf in TESTDATA_SFS for t in TABLES]
+    + [f"encoding:{e}" for e in sorted(FOOTER_TYPES)],
+)
+def test_footer_schema_equals_inferred(spark, tmp_path, source):
+    """The schema ``parquet_reader`` declares from a file's footer is
+    the one Spark's inference resolves under the session's confs:
+    under nanosAsLong, TIMESTAMP(NANOS) is bigint in both."""
+    if source.startswith("encoding:"):
+        name = source.split(":", 1)[1]
+        path = _write(tmp_path, name, FOOTER_TYPES[name])
+    else:
+        path = f"{source}.parquet"
+    declared = parquet_reader(spark)(path).schema
+    assert declared == spark.read.parquet(path).schema
+    if source == "encoding:timestamp_ns":
+        assert declared["ts"].dataType.simpleString() == "bigint"
+
+
+def _load_jobs(spark, lake: str) -> tuple[dict[str, DataFrame], int]:
+    dfs, work = capture_build(spark, "loaders.load", lambda: load(spark, lake))
+    return dfs, sum(a.jobs for a in work)
+
+
+def test_load_of_an_unseen_lake_runs_no_job(spark):
+    """Every table is a single file, so every schema comes from its
+    footer on the driver: 0 Spark jobs, where inference runs 10."""
+    load(spark, SF_DIR)
+    try:
+        _, jobs = _load_jobs(spark, TESTDATA_SFS[1])
+        assert jobs == 0
+    finally:
+        load(spark, SF_DIR)
+
+
+def test_views_point_at_the_last_lake_loaded(spark, monkeypatch):
+    """After load(a); load(b); load(a) the views read a again; a
+    repeated load(a) is a memo hit and registers no view."""
+    a, b = SF_DIR, TESTDATA_SFS[1]
+    rows = pq.ParquetFile(f"{a}/lineitem.parquet").metadata.num_rows
+    frame_type = type(load(spark, a)["lineitem"])
+    load(spark, b)
+    try:
+        assert load(spark, a) is load(spark, a)
+        assert spark.sql("SELECT count(*) AS n FROM lineitem").first()["n"] == rows
+        registered = []
+        monkeypatch.setattr(frame_type, "createOrReplaceTempView",
+                            lambda df, name: registered.append(name))
+        load(spark, a)
+        assert registered == []
+    finally:
+        monkeypatch.undo()
+        load(spark, a)
+
+
+def test_directory_table_loads_through_inference(spark, tmp_path):
+    """A table stored as a directory written by Spark still loads, with
+    its one inference job; the single-file tables beside it run none."""
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    for t in TABLES:
+        if t != "region":
+            shutil.copy(f"{SF_DIR}/{t}.parquet", lake / f"{t}.parquet")
+    spark.read.parquet(f"{SF_DIR}/region.parquet").write.parquet(str(lake / "region.parquet"))
+    try:
+        dfs, jobs = _load_jobs(spark, str(lake))
+        assert jobs == 1
+        want = spark.read.parquet(f"{SF_DIR}/region.parquet")
+        assert dfs["region"].schema == want.schema
+        assert dfs["region"].count() == want.count()
+    finally:
+        load(spark, SF_DIR)

@@ -27,7 +27,6 @@ in ``finally``. Marked slow: each test runs ~5-15 s of real stream.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
@@ -35,13 +34,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pudatalake_spark.sources.ingest import SCRATCH
-
 pytestmark = pytest.mark.slow
-
-
-def _scratch_ckpt():
-    return os.path.join(SCRATCH, "rate_smoke", uuid.uuid4().hex)
 
 
 def _run_until_state_batches(q, min_batches=3, deadline_s=90, until=None):
@@ -95,7 +88,7 @@ def _total_input(progs):
     return sum(p["numInputRows"] for p in progs)
 
 
-def test_rate_windowed_agg_state_bounded(spark):
+def test_rate_windowed_agg_state_bounded(spark, tmp_path):
     """Watermarked tumbling count: open windows are evicted as the
     watermark passes, so state rows stay near (delay + window) /
     window, not near the number of windows ever seen."""
@@ -105,7 +98,7 @@ def test_rate_windowed_agg_state_bounded(spark):
         agg.writeStream.format("memory")
         .queryName(f"rate_win_{uuid.uuid4().hex[:8]}")
         .outputMode("append")
-        .option("checkpointLocation", _scratch_ckpt())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="500 milliseconds")
         .start()
     )
@@ -125,7 +118,7 @@ def test_rate_windowed_agg_state_bounded(spark):
         q.stop()
 
 
-def test_rate_dedup_within_watermark_state_bounded(spark):
+def test_rate_dedup_within_watermark_state_bounded(spark, tmp_path):
     """dropDuplicatesWithinWatermark over a 40-key stream: key state
     is evicted once older than the watermark, so it tracks keys seen
     WITHIN the horizon, not keys-x-batches."""
@@ -139,7 +132,7 @@ def test_rate_dedup_within_watermark_state_bounded(spark):
         dd.writeStream.format("memory")
         .queryName(f"rate_dedup_{uuid.uuid4().hex[:8]}")
         .outputMode("append")
-        .option("checkpointLocation", _scratch_ckpt())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="500 milliseconds")
         .start()
     )
@@ -157,7 +150,7 @@ def test_rate_dedup_within_watermark_state_bounded(spark):
         q.stop()
 
 
-def test_rate_apply_in_pandas_with_state_bounded(spark):
+def test_rate_apply_in_pandas_with_state_bounded(spark, tmp_path):
     """applyInPandasWithState keyed by value % 8: exactly one state
     row per group regardless of how many micro-batches have run (the
     family's contract - per-key state, not per-event)."""
@@ -184,7 +177,7 @@ def test_rate_apply_in_pandas_with_state_bounded(spark):
         out.writeStream.format("memory")
         .queryName(f"rate_apips_{uuid.uuid4().hex[:8]}")
         .outputMode("update")
-        .option("checkpointLocation", _scratch_ckpt())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="500 milliseconds")
         .start()
     )
@@ -196,7 +189,7 @@ def test_rate_apply_in_pandas_with_state_bounded(spark):
         q.stop()
 
 
-def test_rate_stream_stream_join_state_bounded(spark):
+def test_rate_stream_stream_join_state_bounded(spark, tmp_path):
     """Interval self-join of two rate streams: both buffered sides
     evict rows older than the watermark, so buffered state tracks the
     join horizon, not the stream length."""
@@ -226,7 +219,7 @@ def test_rate_stream_stream_join_state_bounded(spark):
         joined.writeStream.format("memory")
         .queryName(f"rate_ssj_{uuid.uuid4().hex[:8]}")
         .outputMode("append")
-        .option("checkpointLocation", _scratch_ckpt())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="500 milliseconds")
         .start()
     )
@@ -247,7 +240,7 @@ def test_rate_stream_stream_join_state_bounded(spark):
         q.stop()
 
 
-def test_rate_session_window_state_bounded(spark):
+def test_rate_session_window_state_bounded(spark, tmp_path):
     """Session windows keyed by value % 5 with sub-second gaps: the
     watermark closes sessions and evicts them; state holds only the
     open sessions per key."""
@@ -263,7 +256,7 @@ def test_rate_session_window_state_bounded(spark):
         sess.writeStream.format("memory")
         .queryName(f"rate_sess_{uuid.uuid4().hex[:8]}")
         .outputMode("append")
-        .option("checkpointLocation", _scratch_ckpt())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="500 milliseconds")
         .start()
     )
