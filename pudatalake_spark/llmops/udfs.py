@@ -46,7 +46,7 @@ def udf_python_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     digit_run = re.compile(r"[0-9]+")
 
-    @F.udf(returnType=T.StringType())
+    @F.udf(returnType=T.StringType(), useArrow=False)
     def normalize(s: str) -> str:
         return digit_run.sub("#", s.strip().lower())
 

@@ -271,11 +271,11 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     # File assignment is ARITHMETIC binning, not repartitionByRange:
     # range boundaries come from reservoir sampling with a per-run
     # seed, so two runs of the same sink produced files with slightly
-    # different span stats (caught by tools/determinism_sweep.py,
-    # r10). floor-division bins on the broadcast min/max are
-    # deterministic; _one_bin_per_partition puts each bin in its own
-    # shuffle partition (collision-free, see its docstring) and
-    # partitionBy splits files per bin, so the layout is exactly
+    # different span stats (caught by the determinism check of
+    # tools/drive_driver.py). floor-division bins on the broadcast
+    # min/max are deterministic; _one_bin_per_partition puts each bin
+    # in its own shuffle partition (collision-free, see its docstring)
+    # and partitionBy splits files per bin, so the layout is exactly
     # n_files files with full write parallelism.
     n_files = 16
     lin = scaled.withColumn(

@@ -7,9 +7,10 @@ DuckDB oracle run, and the canonicalize/compare step — fine as a
 correctness artifact, useless for ranking Spark plans.  This tool
 times ONLY the Spark side: build the DataFrame and materialize it
 through the ``noop`` sink (same protocol as bench.py — full plan
-execution, no collect-to-driver cost), clearing operator caches
-between keys so each measurement pays its own build cost the way a
-fresh job would.
+execution, no collect-to-driver cost). Each ``QUERIES[key]`` call
+runs ``registry.release()`` first, which frees the previous build's
+registered intermediates, so each measurement pays its own build cost
+the way a fresh job would.
 
     python tools/bench_inventory.py [sf_dir] [--out FILE]
 
@@ -182,7 +183,8 @@ def main() -> None:
         json.dump({
             "sf_dir": sf_dir,
             "protocol": (
-                "noop-sink, caches cleared per key; self-healing: keys "
+                "noop-sink, previous build's intermediates released "
+                "per key; self-healing: keys "
                 f">{RERUN_FACTOR}x their previous census (or stamped with "
                 "a steal burst, no prior) re-run up to "
                 f"{MAX_RERUNS}x, min kept"

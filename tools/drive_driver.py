@@ -1,15 +1,28 @@
-"""Driver simulation: what the harness does at verify time.
+"""Driver simulation and the per-key gate.
 
     python tools/drive_driver.py [SF_DIR] [KEY ...]
 
-Runs ``entry(spark)`` on a plain session, then each key of
-``queries()`` at SF_DIR (default /root/testdata/sf0.01), comparing it
-with its ``oracle_sql()`` run in DuckDB. Without keys it sweeps the
-whole inventory and records the sweep in ``SELFCHECK.json``
-(``SELFCHECK_<sf>.json`` for another SF dir); with keys it runs only
-those and writes nothing. Exits 1 when a key fails or is not
-registered. Sweep at sf0.1 as well: overflow bugs show only at the
-larger SF.
+Runs ``entry(spark)`` on a plain session, as the harness does at
+verify time, then checks each key of ``queries()`` at SF_DIR (default
+/root/testdata/sf0.01) by building it three times on that session
+(``check_key``):
+
+- run A, under the session's defaults, is compared with the key's
+  ``oracle_sql()`` run in DuckDB; a key without an oracle is checked
+  rows-only;
+- run B, under the defaults again, must equal run A: the determinism
+  check (arrival-order scoring, unstable tie-breaks under a limit,
+  an accidental ``rand()``);
+- run C, under ``ADVERSE``, must equal run A: the partition check
+  (emitted values that depend on task layout), except for the keys in
+  ``LAYOUT_REPORTING``.
+
+Without keys it sweeps the whole inventory and records the sweep in
+``SELFCHECK.json`` (``SELFCHECK_<sf>.json`` for another SF dir); with
+keys it runs only those and writes nothing. Exits 1 when a key fails
+its oracle, raises, is nondeterministic, is partition-sensitive
+outside ``LAYOUT_REPORTING``, or is not registered. Sweep at sf0.1 as
+well: overflow bugs show only at the larger SF.
 """
 import json
 import os
@@ -19,53 +32,25 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-# Parse before touching Spark: a usage error must not pay the
-# multi-second session startup.
-args = sys.argv[1:]
-SF = args.pop(0) if args and "/" in args[0] else "/root/testdata/sf0.01"
-KEYS = args
+from tests.conftest import canonicalize  # noqa: E402
 
-import duckdb
-from pyspark.sql import SparkSession
+#: Layout a key's output must not depend on: an odd, non-power-of-two
+#: shuffle width, and 64 KiB input splits with no file-open cost, which
+#: cut even sf0.01's single-row-group files into many splits.
+ADVERSE = {
+    "spark.sql.shuffle.partitions": "7",
+    "spark.sql.files.maxPartitionBytes": "65536",
+    "spark.sql.files.openCostInBytes": "0",
+}
 
-# Driver-owned session: plain session, NOT our factory (entry must cope).
-spark = (SparkSession.builder.master("local[32]")
-         .config("spark.sql.shuffle.partitions", "32")
-         .config("spark.ui.enabled", "false")
-         .appName("driver-sim").getOrCreate())
-
-import __spark_entry__ as E
-from pudatalake_spark.llmops import dedup as _dedup
-from pudatalake_spark.loaders import TABLES
-from tests.conftest import canonicalize
-
-t0 = time.time()
-df = E.entry(spark)
-rows = df.collect()
-print(f"T1 SMOKE: entry() -> {len(rows)} rows in {time.time()-t0:.1f}s schema={[f.name for f in df.schema.fields]}")
-assert len(rows) > 0
-
-con = duckdb.connect()
-for t in TABLES:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
-
-Q = E.queries(); O = E.oracle_sql()
-
-# ADVICE r11: the import-time minhash gate is fail-open for fixtures
-# it never measured (an absent dir contradicts nothing). THIS sweep
-# knows its SF dir, so it demotes the key to rows-only when the
-# recall=1.0 claim was never measured on these exact fixture bytes.
-_MH_KEY = "q_dedup_near_minhash"
-_mh_covered, _mh_cover_reason = _dedup.minhash_oracle_covers(SF)
-if _MH_KEY in O and not _mh_covered:
-    del O[_MH_KEY]
-    print(f"NOTE: {_MH_KEY} demoted to rows-only for THIS sweep: "
-          f"{_mh_cover_reason}")
+#: key -> why its output reports physical layout by design.
+LAYOUT_REPORTING = {
+    "q_lake_orphan_files": "reports orphan files under its own scratch lake",
+}
 
 
-def compare(spdf, dpdf):
-    """None when the canonical frames match, else why they differ."""
-    a, b = canonicalize(spdf), canonicalize(dpdf)
+def compare(a, b, names=("spark", "oracle")):
+    """None when two canonical frames match, else why they differ."""
     if list(a.columns) != list(b.columns):
         return f"cols {list(a.columns)} vs {list(b.columns)}"
     if len(a) != len(b):
@@ -74,68 +59,163 @@ def compare(spdf, dpdf):
         return None
     diff = (a != b).any(axis=1)
     return (f"{int(diff.sum())}/{len(a)} rows differ"
-            f"\n    spark:  {a[diff].head(3).to_dict('records')}"
-            f"\n    oracle: {b[diff].head(3).to_dict('records')}")
+            f"\n    {names[0]}: {a[diff].head(3).to_dict('records')}"
+            f"\n    {names[1]}: {b[diff].head(3).to_dict('records')}")
 
 
-fails, results = [], {}
-for name in KEYS or sorted(Q):
-    if name not in Q:
-        fails.append((name, "not registered"))
-        print(f"  {name}: NOT REGISTERED")
-        continue
+def check_key(spark, build, sf, oracle=None, layout_reporting=False):
+    """Build ``build(spark, sf)`` three times on ``spark`` and return
+    the key's record.
+
+    ``status`` is oracle-match or FAIL against the ``oracle`` frame, or
+    rows-only when there is none; ``rows`` and ``secs`` are run A's.
+    ``determinism`` is ok or nondeterministic (run B vs A). ``partition``
+    is ok, sensitive, or by-design when the key reports its layout
+    (run C, under ``ADVERSE``, vs A). ``detail`` holds the first
+    differing rows of each check that failed."""
     t0 = time.time()
+    a = canonicalize(build(spark, sf).toPandas())
+    why = None if oracle is None else compare(a, canonicalize(oracle))
+    rec = {"status": ("rows-only" if oracle is None
+                      else "FAIL" if why else "oracle-match"),
+           "rows": int(len(a)), "secs": round(time.time() - t0, 2)}
+    nondet = compare(a, canonicalize(build(spark, sf).toPandas()),
+                     ("run A", "run B"))
+    rec["determinism"] = "nondeterministic" if nondet else "ok"
+    defaults = {k: spark.conf.get(k) for k in ADVERSE}
     try:
-        spdf = Q[name](spark, SF).toPandas()
-        why = compare(spdf, con.execute(O[name]).df()) if name in O else None
-        status = ("rows-only" if name not in O
-                  else "FAIL" if why else "oracle-match")
-        results[name] = {"status": status, "rows": int(len(spdf)),
-                         "secs": round(time.time() - t0, 2)}
-        if why:
-            fails.append((name, why))
-            results[name]["detail"] = why
-        print(f"  {name}: {status} ({len(spdf)} rows, {time.time()-t0:.1f}s)")
-    except Exception as e:
-        fails.append((name, f"EXC {type(e).__name__}: {str(e)[:200]}"))
-        results[name] = {"status": "ERR", "detail": fails[-1][1]}
-        print(f"  {name}: EXC {str(e)[:150]}")
+        for k, v in ADVERSE.items():
+            spark.conf.set(k, v)
+        c = canonicalize(build(spark, sf).toPandas())
+    finally:
+        for k, v in defaults.items():
+            spark.conf.set(k, v)
+    sensitive = compare(a, c, ("run A", "adverse"))
+    rec["partition"] = ("ok" if not sensitive
+                        else "by-design" if layout_reporting else "sensitive")
+    detail = [f"{check}: {msg}" for check, msg in
+              (("oracle", why), ("determinism", nondet),
+               ("partition", None if layout_reporting else sensitive))
+              if msg]
+    if detail:
+        rec["detail"] = "\n  ".join(detail)
+    return rec
 
-ok = sum(r["status"] == "oracle-match" for r in results.values())
-rows_only = sum(r["status"] == "rows-only" for r in results.values())
-print(f"\nT2: {ok} oracle-match, {rows_only} rows-only, {len(fails)} FAIL")
-for n, msg in fails:
-    print(f"FAIL {n}: {msg}")
-if not _dedup.MINHASH_ORACLE_ENABLED:
-    print("NOTE: q_dedup_near_minhash ran rows-only (oracle self-demoted): "
-          + _dedup.MINHASH_ORACLE_REASON)
 
-if not KEYS:
-    # Durable artifact: the driver's own CORRECTNESS file caps at 50
-    # keys, so this full-inventory sweep is recorded in-repo.
-    _sfname = SF.rstrip("/").rsplit("/", 1)[-1]
-    _out = os.path.join(REPO, "SELFCHECK.json" if _sfname == "sf0.01"
-                        else f"SELFCHECK_{_sfname}.json")
-    with open(_out, "w") as f:
-        json.dump({
-            "sweep": "tools/drive_driver.py full-inventory oracle sweep",
-            "sf_dir": SF,
-            "n_queries": len(Q),
-            "oracle_match": ok,
-            "rows_only": rows_only,
-            "fail": len(fails),
-            # Loud record of the self-demotion gate (VERDICT r10 #3):
-            # if a testdata regen dropped banding recall below 1.0, the
-            # minhash key runs rows-only and this says so.
-            "minhash_oracle": {
-                "enabled": _dedup.MINHASH_ORACLE_ENABLED,
-                "reason": _dedup.MINHASH_ORACLE_REASON,
-                # ADVICE r11: per-sweep coverage of THIS SF dir (the
-                # import-time gate cannot see dirs it never measured).
-                "covers_sf_dir": _mh_covered,
-                "covers_reason": _mh_cover_reason,
-            },
-            "per_query": results,
-        }, f, indent=1, sort_keys=True)
-    print(f"wrote {_out}")
-sys.exit(1 if fails else 0)
+def failed(rec):
+    """Whether a key's record fails the gate."""
+    return (rec["status"] in ("FAIL", "ERR")
+            or rec.get("determinism") == "nondeterministic"
+            or rec.get("partition") == "sensitive")
+
+
+def main(argv):
+    sf = argv.pop(0) if argv and "/" in argv[0] else "/root/testdata/sf0.01"
+    keys = argv
+
+    import duckdb
+    from pyspark.sql import SparkSession
+
+    # Driver-owned session: plain, NOT our factory (entry must cope).
+    spark = (SparkSession.builder.master("local[32]")
+             .config("spark.sql.shuffle.partitions", "32")
+             .config("spark.ui.enabled", "false")
+             .appName("driver-sim").getOrCreate())
+
+    import __spark_entry__ as E
+    from pudatalake_spark.llmops import dedup
+    from pudatalake_spark.loaders import TABLES
+
+    t0 = time.time()
+    df = E.entry(spark)
+    rows = df.collect()
+    print(f"T1 SMOKE: entry() -> {len(rows)} rows in {time.time()-t0:.1f}s "
+          f"schema={[f.name for f in df.schema.fields]}")
+    assert len(rows) > 0
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    Q, O = E.queries(), E.oracle_sql()
+
+    # The import-time minhash gate passes fixtures it never measured;
+    # this sweep knows its SF dir, so it demotes the key to rows-only
+    # when recall=1.0 was never measured on these fixture bytes.
+    mh_key = "q_dedup_near_minhash"
+    mh_covered, mh_reason = dedup.minhash_oracle_covers(sf)
+    if mh_key in O and not mh_covered:
+        del O[mh_key]
+        print(f"NOTE: {mh_key} demoted to rows-only for this sweep: {mh_reason}")
+
+    results = {}
+    for name in keys or sorted(Q):
+        if name not in Q:
+            results[name] = {"status": "ERR", "detail": "not registered"}
+            print(f"  {name}: NOT REGISTERED")
+            continue
+        t0 = time.time()
+        try:
+            oracle = con.execute(O[name]).df() if name in O else None
+            oracle_s = time.time() - t0
+            rec = check_key(spark, Q[name], sf, oracle, name in LAYOUT_REPORTING)
+            # secs is run A plus its oracle query: the driver's cost.
+            rec["secs"] = round(rec["secs"] + oracle_s, 2)
+        except Exception as e:
+            rec = {"status": "ERR",
+                   "detail": f"EXC {type(e).__name__}: {str(e)[:200]}"}
+        results[name] = rec
+        print(f"  {name}: {rec['status']}, determinism "
+              f"{rec.get('determinism', '-')}, partition {rec.get('partition', '-')} "
+              f"({rec.get('rows', '-')} rows, {time.time()-t0:.1f}s)", flush=True)
+
+    count = {k: sum(1 for r in results.values() if r.get(field) == value)
+             for k, field, value in (
+                 ("oracle_match", "status", "oracle-match"),
+                 ("rows_only", "status", "rows-only"),
+                 ("fail", "status", "FAIL"), ("error", "status", "ERR"),
+                 ("nondeterministic", "determinism", "nondeterministic"),
+                 ("partition_sensitive", "partition", "sensitive"),
+                 ("partition_by_design", "partition", "by-design"))}
+    print(f"\nT2: {count['oracle_match']} oracle-match, {count['rows_only']} "
+          f"rows-only, {count['fail']} FAIL, {count['error']} ERR, "
+          f"{count['nondeterministic']} nondeterministic, "
+          f"{count['partition_sensitive']} partition-sensitive "
+          f"({count['partition_by_design']} by design)")
+    bad = sorted(n for n, r in results.items() if failed(r))
+    for n in bad:
+        print(f"FAIL {n}:\n  {results[n].get('detail', '')}")
+    if not dedup.MINHASH_ORACLE_ENABLED:
+        print("NOTE: q_dedup_near_minhash ran rows-only (oracle self-demoted): "
+              + dedup.MINHASH_ORACLE_REASON)
+
+    if not keys:
+        # Durable artifact: the driver's own CORRECTNESS file caps at 50
+        # keys, so this full-inventory sweep is recorded in-repo.
+        sfname = sf.rstrip("/").rsplit("/", 1)[-1]
+        out = os.path.join(REPO, "SELFCHECK.json" if sfname == "sf0.01"
+                           else f"SELFCHECK_{sfname}.json")
+        with open(out, "w") as f:
+            json.dump({
+                "sweep": "tools/drive_driver.py full-inventory sweep: "
+                         "oracle, determinism and partition checks",
+                "sf_dir": sf,
+                "n_queries": len(Q),
+                **count,
+                "adverse_conf": ADVERSE,
+                "layout_reporting": LAYOUT_REPORTING,
+                # If a testdata regen dropped banding recall below 1.0,
+                # the minhash key runs rows-only and this says so.
+                "minhash_oracle": {
+                    "enabled": dedup.MINHASH_ORACLE_ENABLED,
+                    "reason": dedup.MINHASH_ORACLE_REASON,
+                    "covers_sf_dir": mh_covered,
+                    "covers_reason": mh_reason,
+                },
+                "per_query": results,
+            }, f, indent=1, sort_keys=True)
+        print(f"wrote {out}")
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))
