@@ -130,6 +130,14 @@ def _cpu_stat() -> tuple[int, int] | None:
         return None
 
 
+def steal_pct(s0, s1) -> float | None:
+    """% of CPU time the hypervisor stole between two ``_cpu_stat()``
+    samples, or None when either is missing or no time passed."""
+    if s0 and s1 and s1[0] > s0[0]:
+        return round(100.0 * (s1[1] - s0[1]) / (s1[0] - s0[0]), 2)
+    return None
+
+
 def main() -> None:
     gate = _load_gate()
     # Ambient load BEFORE the session spins up: the report's
@@ -173,11 +181,7 @@ def main() -> None:
                 runs.append(round(time.perf_counter() - t0, 3))
             samples[name] = runs
             per_query[name] = statistics.median(runs)
-        s1 = _cpu_stat()
-        steal = None
-        if s0 and s1 and s1[0] > s0[0]:
-            steal = round(100.0 * (s1[1] - s0[1]) / (s1[0] - s0[0]), 2)
-        return per_query, cold, samples, steal
+        return per_query, cold, samples, steal_pct(s0, _cpu_stat())
 
     # Steal-aware retry (r12, VERDICT r11 #7): the r11 DRIVER artifact
     # read 1.04x purely from box conditions while the same code's
@@ -238,13 +242,11 @@ def main() -> None:
         # pass this artifact's numbers come from and how clean it was.
         "steal_gate": steal_gate,
     }
-    stat1 = _cpu_stat()
-    if stat0 and stat1 and stat1[0] > stat0[0]:
-        # % of this run's CPU time stolen by the hypervisor: the
-        # contention channel loadavg cannot see (noisy neighbor).
-        report["cpu_steal_pct"] = round(
-            100.0 * (stat1[1] - stat0[1]) / (stat1[0] - stat0[0]), 2
-        )
+    # % of this run's CPU time stolen by the hypervisor: the
+    # contention channel loadavg cannot see (noisy neighbor).
+    run_steal = steal_pct(stat0, _cpu_stat())
+    if run_steal is not None:
+        report["cpu_steal_pct"] = run_steal
     detail = dict(report, cold_queries=cold, steady_samples=samples)
     # Driver-proofing (VERDICT r5 #6): the r5 driver tail-parse missed
     # the JSON line once cold/steady detail pushed it past the driver's

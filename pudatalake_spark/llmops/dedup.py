@@ -14,22 +14,20 @@ those pairs (verified at build time), so JACCARD_TAU = 0.5.
   cap the hottest shingles (stopword-like shingles create quadratic
   buckets - drop shingles with df > threshold, which cannot create
   false negatives for tau >= 0.5 if capped sensibly).
-- MinHash+LSH: the production path - signature size 32, 8 bands x 4
-  rows; candidates only within equal band buckets; all hashes seeded
-  xxhash64 -> deterministic, re-runnable. pyspark.ml's MinHashLSH
-  uses random per-fit coefficients, so this hand-rolled variant is
-  preferred for reproducible pipelines.
+- MinHash+LSH: the production path - 64 mins, 8 bands x 8 rows;
+  candidates only within equal band buckets, verified by exact
+  Jaccard, so the output is a subset of the exact pairs. Its oracle
+  is the exact pair list: a banding miss fails the oracle check like
+  any other wrong answer. All hashes are seeded xxhash64 ->
+  deterministic, re-runnable. pyspark.ml's MinHashLSH uses random
+  per-fit coefficients, so this hand-rolled variant is preferred for
+  reproducible pipelines.
 - SimHash: 64-bit signature per doc, hamming<=K candidates; here the
   full quadratic check is avoided by joining on 4x16-bit sub-bands
   (pigeonhole: hamming<=3 implies one equal sub-band).
 """
 
 from __future__ import annotations
-
-import hashlib
-import json
-import os
-import warnings
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -44,138 +42,6 @@ SHINGLE_LEN = 5
 N_HASHES = 64
 N_BANDS = 8  # 8 rows per band
 _P31 = 2147483647  # Mersenne prime 2^31 - 1: modulus of the affine family
-
-# ---------------------------------------------------------------------------
-# MinHash oracle gate (r11, VERDICT r10 #3). q_dedup_near_minhash's
-# oracle is the EXACT pair list; the claim is only valid while the
-# banding recall is 1.0 on the exact fixture bytes it was measured
-# on (a testdata regeneration with a new seed could legitimately
-# drop a true pair - per-pair 8x8 miss odds at the fixture's J
-# range are ~1e-3..1e-1 if hashes were random). The measurement is
-# recorded in minhash_recall.json next to this module, keyed by an
-# md5 of each fixture's documents.parquet; if ANY fingerprint
-# mismatches (or the recorded recall < 1.0), the key self-demotes
-# to rows-only at import time - loudly - instead of letting the
-# sweep go red. tools/refresh_minhash_marker.py re-measures and
-# re-arms the oracle after a regen.
-
-_MARKER_PATH = os.path.join(os.path.dirname(__file__), "minhash_recall.json")
-
-
-def _doc_fingerprint(sf_dir: str) -> str | None:
-    p = os.path.join(sf_dir, "documents.parquet")
-    if not os.path.exists(p):
-        return None
-    h = hashlib.md5()
-    with open(p, "rb") as f:
-        for chunk in iter(lambda: f.read(1 << 20), b""):
-            h.update(chunk)
-    return h.hexdigest()
-
-
-def _load_marker(marker_path: str | None):
-    """Read the recall marker as PACKAGE DATA (works under zipimport
-    on shipped executor workers, where ``__file__`` is inside the
-    addPyFile zip and plain ``open`` fails - ADVICE r11) with the
-    path form kept for tests that stage their own marker."""
-    if marker_path is not None:
-        with open(marker_path) as f:
-            return json.load(f)
-    try:
-        from importlib.resources import files
-
-        return json.loads(
-            files(__package__).joinpath("minhash_recall.json").read_text()
-        )
-    except ModuleNotFoundError:
-        raise
-    except Exception:
-        # Older loader without resource support: fall back to the
-        # filesystem path (correct everywhere except zipimport).
-        with open(_MARKER_PATH) as f:
-            return json.load(f)
-
-
-def minhash_oracle_decision(marker_path: str | None = None) -> tuple[bool, str]:
-    """(enabled, reason): may q_dedup_near_minhash claim the
-    exact-pair oracle on the CURRENT fixtures? Enabled iff the
-    committed marker records banding recall exactly 1.0 AND every
-    fixture it was measured on still has the same documents bytes.
-    A fixture dir absent on this host contradicts nothing (but see
-    ``minhash_oracle_covers`` - a sweep on a NEVER-measured fixture
-    should demote itself, ADVICE r11)."""
-    try:
-        marker = _load_marker(marker_path)
-    except Exception as e:  # noqa: BLE001 - any unreadable marker demotes
-        return False, f"recall marker unreadable ({type(e).__name__})"
-    if marker.get("recall") != 1.0:
-        return False, (
-            f"recorded banding recall {marker.get('recall')!r} < 1.0"
-        )
-    for sf_dir, fp in marker.get("fingerprints", {}).items():
-        cur = _doc_fingerprint(sf_dir)
-        if cur is not None and cur != fp:
-            return False, (
-                f"documents fixture at {sf_dir} changed since recall "
-                "was measured (run tools/refresh_minhash_marker.py)"
-            )
-    return True, "banding recall 1.0 re-verified against fixture fingerprints"
-
-
-def minhash_oracle_covers(
-    sf_dir: str, marker_path: str | None = None
-) -> tuple[bool, str]:
-    """(covered, reason): was banding recall actually MEASURED on the
-    documents fixture at ``sf_dir``? The import-time gate above is
-    necessarily fail-open for fixtures it has never seen (an absent
-    dir contradicts nothing), so a sweep pointed at a NEW SF dir - a
-    new scale, a relocated regen, a host-local corpus - must check
-    this and run the minhash key rows-only rather than claim a recall
-    it never measured (ADVICE r11). Sweep drivers call this with
-    their actual SF dir; tools/refresh_minhash_marker.py extends the
-    marker to new fixtures."""
-    try:
-        marker = _load_marker(marker_path)
-    except Exception as e:  # noqa: BLE001
-        return False, f"recall marker unreadable ({type(e).__name__})"
-    cur = _doc_fingerprint(sf_dir)
-    if cur is None:
-        return False, f"no documents.parquet at {sf_dir}"
-    fps = marker.get("fingerprints", {})
-    recorded = fps.get(os.path.abspath(sf_dir)) or fps.get(sf_dir)
-    if recorded is None:
-        return False, (
-            f"recall never measured on {sf_dir} (run "
-            "tools/refresh_minhash_marker.py to extend the marker)"
-        )
-    if recorded != cur:
-        return False, f"documents fixture at {sf_dir} changed since measurement"
-    return True, f"recall measured on this exact fixture ({sf_dir})"
-
-
-MINHASH_ORACLE_ENABLED, MINHASH_ORACLE_REASON = minhash_oracle_decision()
-if not MINHASH_ORACLE_ENABLED:  # pragma: no cover - regen-time path
-    warnings.warn(
-        "q_dedup_near_minhash DEMOTED to rows-only: "
-        f"{MINHASH_ORACLE_REASON}. The operator still runs and its "
-        "output is still a verified subset of the exact pair list; "
-        "only the recall=1.0 oracle claim is withdrawn. Re-measure "
-        "with tools/refresh_minhash_marker.py.",
-        stacklevel=1,
-    )
-
-
-def measure_banding_recall(docs: DataFrame, tau: float = JACCARD_TAU) -> float:
-    """Banding recall of the MinHash+LSH pipeline vs the exact
-    inverted-index pair list on the SAME frame. The verify stage
-    makes minhash output a SUBSET of the exact pairs by construction
-    (no false positive can survive the exact-Jaccard filter), so
-    recall = |minhash pairs| / |exact pairs|."""
-    exact = near_jaccard_pairs(docs, tau).count()
-    if exact == 0:
-        return 1.0
-    got = minhash_verified_pairs(docs, tau).count()
-    return got / exact
 
 
 @register(
@@ -698,7 +564,10 @@ def minhash_verified_pairs(
     diamond); the candidate sets frame is persisted (it feeds both
     verify sides). Jaccard on hashed shingles equals Jaccard on
     shingles up to xxhash64 collisions (P ~ n^2/2^64 per pair -
-    negligible; the oracle gate measures recall on the exact bytes).
+    negligible).
+
+    Contract: the output is a subset of ``near_jaccard_pairs(docs,
+    tau)``; it equals that list exactly when banding recall is 1.0.
     """
     banded = cached(_banded_signatures(_sampled_instances(docs)))
     a = banded.alias("a")
@@ -867,42 +736,26 @@ def cross_corpus_probe(
 
 @register(
     "q_dedup_near_minhash",
-    # The exact-pair oracle is claimed ONLY while the committed
-    # recall marker vouches for banding recall 1.0 on the current
-    # fixture bytes; otherwise the key self-demotes to rows-only
-    # (see the module-top gate and its warning).
-    oracle=(
-        f"""
+    oracle=f"""
     WITH {_PAIR_ORACLE_CTES}
     SELECT d1 AS doc1, d2 AS doc2, jaccard FROM pr
-    """
-        if MINHASH_ORACLE_ENABLED
-        else None
-    ),
+    """,
 )
 def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs over the documents table - see
     minhash_verified_pairs for the banding + exact-verify plan.
 
-    ORACLED as of r9 (VERDICT r8 #4): the oracle is the exact-Jaccard
-    pair list (shared CTEs with q_dedup_near_jaccard), NOT a SQL
-    re-implementation of the minhash pipeline. Validity: the verify
-    stage makes output ⊆ exact-pairs by construction (no false
-    positives possible), so hash-match ⇔ banding recall = 1.0 on the
-    fixture — which the oracle now enforces at driver level instead
-    of only in pytest. Determinism makes this stable: seeded hashes +
-    fixed corpus give ONE answer, and recall has been 1.0 at every SF
-    since r1 (true-pair J distribution: min 0.93 at sf0.01 / 0.83 at
-    sf0.1; per-pair 8x8-banding miss odds at those J, IF hashes were
-    random: ~1.4e-3 / ~1.3e-1 — so a future testdata regeneration
-    with a new seed could flip the sf0.1 sweep red. r11: that
-    fallback is now AUTOMATED - the oracle claim is gated on the
-    committed recall marker (minhash_recall.json: recall 1.0 +
-    fixture fingerprints); a regen mismatches the fingerprint and
-    the key self-demotes to rows-only with a warning instead of
-    failing the sweep (tools/refresh_minhash_marker.py re-arms).
-    Oracle cost measured r9: 1.9 s at sf0.01, 104 s at sf0.1 (the
-    both-SF selfcheck sweep pays the latter).
+    The oracle is the exact-Jaccard pair list (shared CTEs with
+    q_dedup_near_jaccard), not a SQL re-implementation of the minhash
+    pipeline. The verify stage makes the output a subset of the exact
+    pairs, so a match means banding recall is 1.0 on the fixture, and
+    a banding miss fails the oracle check with a short row count.
+    Seeded hashes on a fixed corpus give one answer; recall has been
+    1.0 at every SF (true-pair J: min 0.93 at sf0.01, 0.83 at sf0.1).
+    A testdata regeneration with a new seed could drop a true pair
+    near tau (8x8-banding miss odds at J 0.83 are ~1.3e-1 if the
+    hashes were random); the sweep then reports the key as FAIL.
+    Oracle cost: 1.9 s at sf0.01, 104 s at sf0.1.
     """
     d = spread(table(spark, sf_dir, "documents"), "doc_id")
     return minhash_verified_pairs(d, JACCARD_TAU)

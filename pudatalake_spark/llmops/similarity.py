@@ -2269,8 +2269,10 @@ def q_sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundary makes the join probe read flat int rows (measured
     # 2.6 s -> 0.3 s per pass on the same synthetic shape). The frame
     # is 32 ints per vector - strictly smaller than the raw float
-    # corpus it replaces in every downstream pass.
-    subs = superstep_checkpoint(subs)
+    # corpus it replaces in every downstream pass. Eager: the collect
+    # below reads subs anyway, and a lazy checkpoint would run its job
+    # at the call on some core counts and not others.
+    subs = superstep_checkpoint(subs, eager=True)
 
     import numpy as np
     import pandas as pd

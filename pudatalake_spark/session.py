@@ -125,12 +125,9 @@ def _ship_package(spark: SparkSession) -> None:
         with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
             for root, _dirs, files in os.walk(pkg_dir):
                 for f in sorted(files):
-                    # .json rides along for package DATA read at import
-                    # time (llmops/minhash_recall.json): a worker that
-                    # imports dedup from the zip must see the marker,
-                    # or it would warn-demote the oracle spuriously
-                    # (ADVICE r11). zipimport serves both fine.
-                    if not f.endswith((".py", ".json")):
+                    # The package reads no data files at import: its
+                    # modules are all a worker needs.
+                    if not f.endswith(".py"):
                         continue
                     full = os.path.join(root, f)
                     rel = os.path.relpath(full, os.path.dirname(pkg_dir))

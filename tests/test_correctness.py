@@ -91,15 +91,6 @@ def test_survey_inventory_matches_registry():
     assert int(m.group(1)) == len(registered), (
         f"SURVEY claims {m.group(1)} operators, registry has {len(registered)}"
     )
-    # q_dedup_near_minhash's oracle self-demotes when the recall
-    # marker no longer vouches for the current fixtures (r11 gate);
-    # the declared count assumes the armed state.
-    from pudatalake_spark.llmops.dedup import MINHASH_ORACLE_ENABLED
-
-    expected_oracles = len(registry.ORACLES) + (
-        0 if MINHASH_ORACLE_ENABLED else 1
-    )
-    assert int(m.group(2)) == expected_oracles, (
+    assert int(m.group(2)) == len(registry.ORACLES), (
         f"SURVEY claims {m.group(2)} oracled, registry has {len(registry.ORACLES)}"
-        f" (minhash gate armed={MINHASH_ORACLE_ENABLED})"
     )

@@ -102,6 +102,26 @@ def check_key(spark, build, sf, oracle=None, layout_reporting=False):
     return rec
 
 
+def sweep_key(spark, con, sf, name, queries, oracles):
+    """Check key ``name`` of ``queries`` at ``sf`` with ``check_key``,
+    against its ``oracles`` SQL (if any) run on the DuckDB connection
+    ``con``, and return its record. An unregistered key, or one whose
+    build or oracle raises, is an ERR record."""
+    if name not in queries:
+        return {"status": "ERR", "detail": "not registered"}
+    t0 = time.time()
+    try:
+        oracle = con.execute(oracles[name]).df() if name in oracles else None
+        oracle_s = time.time() - t0
+        rec = check_key(spark, queries[name], sf, oracle, name in LAYOUT_REPORTING)
+        # secs is run A plus its oracle query: the driver's cost.
+        rec["secs"] = round(rec["secs"] + oracle_s, 2)
+    except Exception as e:
+        rec = {"status": "ERR",
+               "detail": f"EXC {type(e).__name__}: {str(e)[:200]}"}
+    return rec
+
+
 def failed(rec):
     """Whether a key's record fails the gate."""
     return (rec["status"] in ("FAIL", "ERR")
@@ -123,7 +143,6 @@ def main(argv):
              .appName("driver-sim").getOrCreate())
 
     import __spark_entry__ as E
-    from pudatalake_spark.llmops import dedup
     from pudatalake_spark.loaders import TABLES
 
     t0 = time.time()
@@ -138,32 +157,10 @@ def main(argv):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     Q, O = E.queries(), E.oracle_sql()
 
-    # The import-time minhash gate passes fixtures it never measured;
-    # this sweep knows its SF dir, so it demotes the key to rows-only
-    # when recall=1.0 was never measured on these fixture bytes.
-    mh_key = "q_dedup_near_minhash"
-    mh_covered, mh_reason = dedup.minhash_oracle_covers(sf)
-    if mh_key in O and not mh_covered:
-        del O[mh_key]
-        print(f"NOTE: {mh_key} demoted to rows-only for this sweep: {mh_reason}")
-
     results = {}
     for name in keys or sorted(Q):
-        if name not in Q:
-            results[name] = {"status": "ERR", "detail": "not registered"}
-            print(f"  {name}: NOT REGISTERED")
-            continue
         t0 = time.time()
-        try:
-            oracle = con.execute(O[name]).df() if name in O else None
-            oracle_s = time.time() - t0
-            rec = check_key(spark, Q[name], sf, oracle, name in LAYOUT_REPORTING)
-            # secs is run A plus its oracle query: the driver's cost.
-            rec["secs"] = round(rec["secs"] + oracle_s, 2)
-        except Exception as e:
-            rec = {"status": "ERR",
-                   "detail": f"EXC {type(e).__name__}: {str(e)[:200]}"}
-        results[name] = rec
+        rec = results[name] = sweep_key(spark, con, sf, name, Q, O)
         print(f"  {name}: {rec['status']}, determinism "
               f"{rec.get('determinism', '-')}, partition {rec.get('partition', '-')} "
               f"({rec.get('rows', '-')} rows, {time.time()-t0:.1f}s)", flush=True)
@@ -184,9 +181,6 @@ def main(argv):
     bad = sorted(n for n, r in results.items() if failed(r))
     for n in bad:
         print(f"FAIL {n}:\n  {results[n].get('detail', '')}")
-    if not dedup.MINHASH_ORACLE_ENABLED:
-        print("NOTE: q_dedup_near_minhash ran rows-only (oracle self-demoted): "
-              + dedup.MINHASH_ORACLE_REASON)
 
     if not keys:
         # Durable artifact: the driver's own CORRECTNESS file caps at 50
@@ -203,14 +197,6 @@ def main(argv):
                 **count,
                 "adverse_conf": ADVERSE,
                 "layout_reporting": LAYOUT_REPORTING,
-                # If a testdata regen dropped banding recall below 1.0,
-                # the minhash key runs rows-only and this says so.
-                "minhash_oracle": {
-                    "enabled": dedup.MINHASH_ORACLE_ENABLED,
-                    "reason": dedup.MINHASH_ORACLE_REASON,
-                    "covers_sf_dir": mh_covered,
-                    "covers_reason": mh_reason,
-                },
                 "per_query": results,
             }, f, indent=1, sort_keys=True)
         print(f"wrote {out}")
