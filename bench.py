@@ -250,15 +250,9 @@ def main() -> None:
     detail = dict(report, cold_queries=cold, steady_samples=samples)
     # Driver-proofing (VERDICT r5 #6): the r5 driver tail-parse missed
     # the JSON line once cold/steady detail pushed it past the driver's
-    # line-length assumptions. The full detail goes to bench_last.json
-    # (recoverable) and an earlier DETAIL line; the FINAL stdout line is
-    # the compact report only, with compact separators.
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "bench_last.json"), "w") as f:
-            json.dump(detail, f, indent=1)
-    except OSError:
-        pass
+    # line-length assumptions. The full detail goes to an earlier
+    # DETAIL line; the FINAL stdout line is the compact report only,
+    # with compact separators. A run writes no file.
     print("DETAIL " + json.dumps(detail, separators=(",", ":")))
     print(json.dumps(report, separators=(",", ":")))
 

@@ -118,7 +118,10 @@ def udf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    ev = table(spark, sf_dir, "events")
+    # Catalyst cannot prune columns through a Python function: select
+    # what ``stats`` reads, or every events column is shuffled and
+    # converted to pandas for each group.
+    ev = table(spark, sf_dir, "events").select("user_id", "value")
     return ev.groupBy("user_id").applyInPandas(stats, schema=schema)
 
 

@@ -21,7 +21,6 @@ from typing import Callable
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import _parse_datatype_json_string
 
 from .registry import hold
 from .session import ensure_conf
@@ -148,30 +147,36 @@ def parquet_reader(spark: SparkSession) -> Callable[[str], DataFrame]:
     For a single file, the driver reads the footer and Spark's own
     converter maps it under the session's confs (``nanosAsLong``,
     TIMESTAMP_NTZ inference), the mapping inference runs in its job;
-    the scan declares that schema and runs no job. Any other path (a
-    directory, or a missing one) goes to ``spark.read.parquet``: one
-    inference job, or Spark's own error. The returned function shares
-    one Hadoop conf and one converter across calls."""
+    the scan declares that JVM schema and runs no job. Any other path
+    (a directory, or a missing one) goes to ``spark.read.parquet``:
+    one inference job, or Spark's own error.
+
+    Each py4j call is a round trip, and a dotted ``jvm.org.apache...``
+    name costs one per package segment. So the classes and static
+    methods are resolved once here, by full name, and the returned
+    function shares them with one Hadoop conf and one converter: a
+    footer-read table costs nine calls, and the schema never leaves
+    the JVM."""
     jvm = spark._jvm
-    state = spark._jsparkSession.sessionState()
+    jspark = spark._jsparkSession
+    state = jspark.sessionState()
     hconf = state.newHadoopConf()
-    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
-    converter = parquet.ParquetToSparkSchemaConverter(state.conf())
-    skip_row_groups = (
-        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
-    )
+    parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    path_of = getattr(jvm, "org.apache.hadoop.fs.Path")
+    footer_of = getattr(jvm, "org.apache.parquet.hadoop.Footer")
+    read_footer = getattr(jvm, "org.apache.parquet.hadoop.ParquetFileReader").readFooter
+    to_spark = getattr(jvm, parquet + "ParquetFileFormat").readSchemaFromFooter
+    converter = getattr(jvm, parquet + "ParquetToSparkSchemaConverter")(state.conf())
+    skip_row_groups = getattr(
+        jvm, "org.apache.parquet.format.converter.ParquetMetadataConverter"
+    ).SKIP_ROW_GROUPS
 
     def read(path: str) -> DataFrame:
-        p = jvm.org.apache.hadoop.fs.Path(path)
+        p = path_of(path)
         if not p.getFileSystem(hconf).isFile(p):
             return spark.read.parquet(path)
-        meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-            hconf, p, skip_row_groups
-        )
-        schema = parquet.ParquetFileFormat.readSchemaFromFooter(
-            jvm.org.apache.parquet.hadoop.Footer(p, meta), converter
-        )
-        return spark.read.schema(_parse_datatype_json_string(schema.json())).parquet(path)
+        schema = to_spark(footer_of(p, read_footer(hconf, p, skip_row_groups)), converter)
+        return DataFrame(jspark.read().schema(schema).parquet(path), spark)
 
     return read
 

@@ -209,10 +209,11 @@ def s_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup on event_id within the watermark horizon. The
     source is staged WITH duplicates (events unioned twice) to prove
-    the dedup state works."""
+    the dedup state works. The drain is one availableNow batch, so the
+    staged files need no event-time order: one write job stages them."""
     src = _fresh("s_stream_dedup", "src")
     ev = table(spark, sf_dir, "events")
-    ev.unionByName(ev).repartitionByRange(4, "ts").write.mode("overwrite").parquet(src)
+    ev.unionByName(ev).write.mode("overwrite").parquet(src)
     stream = read_event_stream(spark, src)
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
@@ -229,7 +230,8 @@ def s_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     src = stage_event_files(spark, sf_dir, "s_stateful_running")
-    stream = read_event_stream(spark, src)
+    # Only the columns ``update`` reads reach the Python worker.
+    stream = read_event_stream(spark, src).select("user_id", "value")
 
     out_schema = T.StructType(
         [
@@ -395,7 +397,10 @@ def s_anomaly_score(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     src = stage_event_files(spark, sf_dir, "s_anomaly_score")
-    stream = read_event_stream(spark, src, max_files=max_files)
+    # Only the columns ``score`` reads reach the Python worker.
+    stream = read_event_stream(spark, src, max_files=max_files).select(
+        "event_type", "event_id", "ts", "value"
+    )
 
     out_schema = T.StructType(
         [
