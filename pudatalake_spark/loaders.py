@@ -17,6 +17,7 @@ from Catalyst as long as callers select/filter on native columns
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 from urllib.parse import urlparse
 
@@ -41,6 +42,13 @@ TABLES = [
 # The last lake ``load`` read: (session, dir, frames). The temp views
 # of that session point at these frames.
 _LOADED: tuple[SparkSession, str, dict[str, DataFrame]] | None = None
+
+#: Threads a ``load`` reads its tables on. A table costs the driver a
+#: footer read, the scan's analysis and its view's, about 11 ms of
+#: JVM work behind py4j calls that other tables need not wait for
+#: (docs/SCALING.md §28). On a remote file system each footer read is
+#: a network round trip as well.
+LOAD_THREADS = 4
 
 
 # Timestamp-typed columns per table. The generator has re-encoded
@@ -185,7 +193,8 @@ def load(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load all tables under sf_dir and register them as temp views.
 
     A single-file table loads with no Spark job; a directory table
-    with Spark's inference (``parquet_reader``). The memo holds one
+    with Spark's inference (``parquet_reader``). Tables load on
+    ``LOAD_THREADS`` threads. The memo holds one
     entry, the last lake loaded: only this function registers the
     table views, so a hit means this session's views already point at
     this lake, and it returns without touching the catalog. A miss
@@ -200,13 +209,21 @@ def load(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         return _LOADED[2]
     _LOADED = None  # the views stop matching any entry from here on
     read = parquet_reader(spark)
-    dfs: dict[str, DataFrame] = {}
-    for name in TABLES:
+    jsc = spark.sparkContext._jsc.sc()
+    props = jsc.getLocalProperties().clone()
+
+    def one(name: str) -> DataFrame:
+        # A job the load runs (inference, a ts-unit sniff) keeps the
+        # caller's job group: each Python thread has a JVM thread.
+        jsc.setLocalProperties(props)
         df = read(f"{sf_dir}/{name}.parquet")
         if name in TS_COLUMNS:
             df = _normalize_ts(df, TS_COLUMNS[name])
         df.createOrReplaceTempView(name)
-        dfs[name] = df
+        return df
+
+    with ThreadPoolExecutor(LOAD_THREADS) as pool:
+        dfs = dict(zip(TABLES, pool.map(one, TABLES)))
     _LOADED = (spark, sf_dir, dfs)
     return dfs
 

@@ -43,11 +43,6 @@ RUNTIME_CONF = {
 }
 
 
-#: Static conf: whether each PySpark Column call records its Python
-#: call site in the JVM, for error messages.
-DEBUGGING_CONF = "spark.python.sql.dataFrameDebugging.enabled"
-
-
 #: SparkContext application ids that already carry the package zip.
 _SHIPPED: set[str] = set()
 
@@ -241,12 +236,7 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int = 32,
 ) -> SparkSession:
-    """Build (or get) a session with the engine's standard config.
-
-    Its Column calls capture no Python call site
-    (``DEBUGGING_CONF=false``), so an error's DataFrame query context
-    names no builder line. A session the engine does not build, such
-    as the driver contract's, keeps PySpark's default."""
+    """Build (or get) a session with the engine's standard config."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
     master = master or f"local[{cpus}]"
     builder = (
@@ -273,10 +263,6 @@ def get_spark(
         # loops / long-lived clusters). Static conf, so it must be set
         # at build time; harmless when checkpointing is unused.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        # Call-site capture costs each Column call a stack walk and
-        # about 13 py4j calls where 3 do (docs/SCALING.md §28).
-        # PySpark reads it once per process, at the first Column call.
-        .config(DEBUGGING_CONF, "false")
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -3,39 +3,30 @@ columns a Python worker receives (docs/SCALING.md §28)."""
 
 from __future__ import annotations
 
-import threading
-
-from pyspark.errors.utils import is_debugging_enabled
-
 from pudatalake_spark import registry
 from pudatalake_spark.loaders import load
-from pudatalake_spark.session import DEBUGGING_CONF
 
 from tests.conftest import SF_DIR
 from tests.test_loader_normalize import TESTDATA_SFS
 
 registry.load_all()
 
-
-def test_engine_session_captures_no_call_sites(spark):
-    """``get_spark`` turns PySpark's per-Column call-site capture off,
-    and PySpark's cached flag agrees."""
-    assert spark.conf.get(DEBUGGING_CONF) == "false"
-    assert is_debugging_enabled() is False
+#: py4j's command to release a Python-side handle; its finalizer
+#: thread sends these whenever Python collects one.
+RELEASE = "m\nd\n"
 
 
 def test_lake_load_round_trips(spark, monkeypatch):
     """Loading the 10-table lake stays well under the 500-600 py4j
     calls a per-segment class lookup and a JSON schema round trip
-    made. Only this thread's calls count: py4j's finalizer thread
-    sends object releases whenever Python collects a handle."""
+    made. Every loading thread's calls count; handle releases do not."""
     client = spark.sparkContext._gateway._gateway_client
-    send, me, calls = client.send_command, threading.get_ident(), []
+    send, calls = client.send_command, []
 
-    def counting(*args, **kwargs):
-        if threading.get_ident() == me:
-            calls.append(args[0] if args else None)
-        return send(*args, **kwargs)
+    def counting(command, *args, **kwargs):
+        if not command.startswith(RELEASE):
+            calls.append(command)
+        return send(command, *args, **kwargs)
 
     load(spark, TESTDATA_SFS[1])  # so that SF_DIR is a memo miss
     try:
